@@ -22,6 +22,9 @@ minimal — enough to make the ENGINE-side plan shapes real and testable:
 - Every commit is a new immutable manifest ``v{N}.json``; readers pin a
   version (time travel) or take the latest. Data files are never mutated,
   so a reader of v0 is unaffected by a concurrent v1 commit.
+- Every manifest records the table schema, and snapshot reads use it as
+  the read schema: building a read starts no schema-inference job, and a
+  file written before an additive column serves NULL for it.
 - The driver-side state is O(partitions touched) + O(files): partition
   values of the update batch (a ``collect()`` of a distinct over the
   partition column — bounded by the partition count by definition) and the
@@ -212,10 +215,10 @@ def _file_column_stats(path: str) -> dict:
 
 def _evolved_schema_json(base: dict | None, *dfs: DataFrame) -> str:
     """Manifest-tracked table schema: the previous manifest's schema plus
-    any new columns this commit's batches introduce (additive evolution —
-    matching what the mergeSchema snapshot read reconciles). Metadata only;
-    lets ``read_table`` serve an EMPTY manifest (stream-initialized v0)
-    without a parquet file to infer from."""
+    any new columns this commit's batches introduce (additive evolution).
+    Metadata only; every snapshot read uses it as the read schema, so no
+    read infers one from the files, and an EMPTY manifest
+    (stream-initialized v0) stays readable."""
     fields: list = []
     names: set[str] = set()
     if base is not None and base.get("schema"):
@@ -235,11 +238,11 @@ def _check_schema_compatible(m: dict, df: DataFrame, context: str) -> None:
     column that SHARES A NAME with a manifest-schema column must carry the
     same type. Without this, an incompatible file (e.g. a DECIMAL literal
     landing in a DOUBLE column via ``INSERT INTO LAKE(...) SELECT 21.0``)
-    commits fine and every subsequent mergeSchema READ of the table dies
-    with CANNOT_MERGE_SCHEMAS — fail the writer, not the readers. New
-    columns remain allowed (additive evolution); nullability differences
-    are ignored (parquet reconciles them); legacy manifests without a
-    recorded schema skip the check."""
+    commits fine and every subsequent READ of the table dies, since the
+    file cannot serve the recorded column type — fail the writer, not the
+    readers. New columns remain allowed (additive evolution); nullability
+    differences are ignored (reads serve every column nullable); legacy
+    manifests without a recorded schema skip the check."""
     if not m.get("schema"):
         return
 
@@ -248,7 +251,7 @@ def _check_schema_compatible(m: dict, df: DataFrame, context: str) -> None:
         # equality includes ArrayType.containsNull / MapType.
         # valueContainsNull / nested StructField.nullable, and a batch
         # built from literals legitimately differs there from a schema
-        # recorded off a read — parquet + mergeSchema reconcile those
+        # recorded off a read — the schema-pinned read serves those
         # fine (review r15)
         from pyspark.sql.types import ArrayType, MapType
         from pyspark.sql.types import StructField as SF
@@ -677,19 +680,24 @@ def _read_entries(
     spark: SparkSession, table_dir: str, m: dict, entries: list[dict]
 ) -> DataFrame:
     """Read a subset of a manifest's data-file entries with the manifest's
-    equality deletes applied (merge-on-read): entries are grouped by their
-    applicable-delete set, each group anti-joins the delete key files
-    (broadcast — delete files are key-only and batch-sized), and groups
-    union back with schema reconciliation. With no delete files this is a
-    single mergeSchema read — the fast path is unchanged."""
+    equality deletes applied (merge-on-read).
+
+    Data files are read with the schema the manifest records, so no
+    schema-inference job runs: a column a file lacks (written before an
+    additive evolution, or declared by a metadata-only ``add_column``)
+    reads as NULL, and the snapshot's schema never depends on which files
+    survived pruning. Legacy manifests without a recorded schema fall back
+    to a ``mergeSchema`` read. Entries are grouped by their
+    applicable-delete set; each group anti-joins the delete key files
+    (broadcast — delete files are key-only and batch-sized) and the groups
+    union back. With no delete files this is a single read."""
+    schema = m.get("schema")
+    reader = (
+        spark.read.schema(StructType.fromJson(json.loads(schema)))
+        if schema
+        else spark.read.option("mergeSchema", "true")
+    )
     dels = m.get("delete_files") or []
-    if not dels:
-        return _reconcile_declared_schema(
-            spark.read.option("mergeSchema", "true").parquet(
-                *[os.path.join(table_dir, f["path"]) for f in entries]
-            ),
-            m,
-        )
     groups: dict[tuple[int, ...], list[str]] = {}
     for f in entries:
         groups.setdefault(_applicable_deletes(m, f), []).append(
@@ -697,36 +705,17 @@ def _read_entries(
         )
     out = None
     for applicable in sorted(groups):
-        df = spark.read.option("mergeSchema", "true").parquet(
-            *groups[applicable]
-        )
+        df = reader.parquet(*groups[applicable])
         for i in applicable:
             d = dels[i]
+            # delete key files keep inference: their key types may differ
+            # from the table's (the anti-join implicit-casts)
             kdf = spark.read.parquet(os.path.join(table_dir, d["path"]))
             df = df.join(F.broadcast(kdf), d["keys"], "left_anti")
         out = df if out is None else out.unionByName(
             df, allowMissingColumns=True
         )
-    return _reconcile_declared_schema(out, m)
-
-
-def _reconcile_declared_schema(df: DataFrame, m: dict) -> DataFrame:
-    """NULL-fill columns the manifest SCHEMA declares but no selected file
-    carries. Two ways that happens: a metadata-only ``add_column`` commit
-    (no file has the column until a later write), and a pruned subset read
-    (scan_table / change-feed) that happens to skip every file carrying an
-    evolved column. Without this, a snapshot's schema would depend on
-    WHICH files survived pruning — reconciliation pins it to the declared
-    schema, exactly what mergeSchema already does when at least one
-    selected file has the column."""
-    if not m.get("schema"):
-        return df
-    declared = StructType.fromJson(json.loads(m["schema"]))
-    have = {c.lower() for c in df.columns}
-    for f in declared.fields:
-        if f.name.lower() not in have:
-            df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
-    return df
+    return out
 
 
 def version_at(table_dir: str, timestamp: str) -> int:
@@ -794,9 +783,10 @@ def read_table(
 ) -> DataFrame:
     """Snapshot read: exactly the files the pinned manifest lists — never a
     directory scan, so concurrent commits and dead files are invisible.
-    ``mergeSchema`` reconciles evolved schemas: files written before a
-    column was added serve NULL for it (additive schema evolution, the
-    lakehouse upgrade path that avoids rewriting history). Outstanding
+    Files are read with the manifest's recorded schema, so building the
+    read starts no Spark job, and files written before a column was added
+    serve NULL for it (additive schema evolution, the lakehouse upgrade
+    path that avoids rewriting history). Outstanding
     equality deletes apply at read time (merge-on-read). ``timestamp``
     pins the snapshot by commit time instead of version (``version_at``);
     ``tag`` pins it by named ref (``create_tag``)."""
@@ -921,7 +911,8 @@ def delete_commit(
     # deliberately NO type check on delete keys: the read-side anti-join
     # implicit-casts (string '2' erases bigint 2 — pinned by
     # test_cross_type_delete_stats_never_crash_reads), and the delete file
-    # never enters the mergeSchema data read, so cross-type keys are safe
+    # is read with its own inferred schema, never the table's, so
+    # cross-type keys are safe
     ddir = os.path.join(table_dir, "deletes")
     os.makedirs(ddir, exist_ok=True)
     name = f"d{version:05d}-{_write_token()}"
@@ -1212,8 +1203,9 @@ def compact(
             carried += 1
             continue
         compacted += 1
-        # mergeSchema: a partition's live files may straddle a schema
-        # evolution; the compacted file carries the reconciled schema.
+        # a partition's live files may straddle a schema evolution; the
+        # compacted file carries the table schema (NULL where a file
+        # predates a column).
         # Applicable equality deletes are applied DURING the rewrite (the
         # compacted file post-dates them, so they'd otherwise resurrect);
         # carried files keep taking them at read time.
@@ -1512,7 +1504,7 @@ def add_column(table_dir: str, name: str, ddl_type: str) -> dict:
     """ALTER ... ADD COLUMN (Delta/Iceberg additive schema evolution as
     explicit DDL): append a nullable column to the manifest schema as a
     metadata-only commit — zero data IO, every file carried. Readers
-    NULL-fill it immediately (``_reconcile_declared_schema``); later
+    NULL-fill it immediately (the schema-pinned ``_read_entries``); later
     writes may populate it (the same additive path implicit evolution
     already takes when a batch carries a new column). The implicit path
     stays available; this is the declare-first twin."""
@@ -2051,28 +2043,26 @@ def merge_cow(
 
     if DELETE_COL in updates.columns:
         # NULL flags mean "not a delete" — a bare where(~col) would
-        # silently drop NULL-flagged rows from BOTH branches
+        # silently drop NULL-flagged rows
         flag = F.coalesce(F.col(DELETE_COL), F.lit(False))
-        deletes = updates.where(flag).select(*keys)
         upserts = updates.where(~flag).drop(DELETE_COL)
     else:
-        deletes = None
         upserts = updates
     # constraints gate the rows being ADDED — deletes are erasure, not data
     _check_constraints(m, upserts, "merge_cow")
     if touched_files:
-        # mergeSchema: the touched partitions' live files may straddle an
-        # additive schema evolution; outstanding equality deletes are
-        # applied here (the rewritten files post-date them)
+        # the base read serves the table schema (files that predate an
+        # additive evolution read NULL for it); outstanding equality
+        # deletes are applied here (the rewritten files post-date them)
         base = _read_entries(spark, table_dir, m, touched_files)
-        merged = base.join(upserts.select(*keys), keys, "left_anti")
-        if deletes is not None:
-            merged = merged.join(deletes, keys, "left_anti")
+        # ONE anti-join against every batch key: upsert and delete rows
+        # together make up the batch, and both remove the base row
+        merged = base.join(updates.select(*keys), keys, "left_anti")
         # allowMissingColumns both directions (VERDICT r12 task 5): an
         # evolved batch merging into legacy partitions NULL-fills the
         # new column on base rows; a legacy batch merging into an
         # evolved base NULL-fills it on the upserts — matching what the
-        # mergeSchema snapshot read serves
+        # snapshot read serves
         merged = merged.unionByName(upserts, allowMissingColumns=True)
     else:
         merged = upserts

@@ -46,6 +46,8 @@ def pack_by_budget(
     """(*ids, weight, shard): shard = floor(total weight of ids before this
     one / budget) in the total order of the (possibly composite) id key.
     Deterministic — integer weights, total key order."""
+    if budget < 1:
+        raise ValueError(f"need budget >= 1, got {budget}")
     id_cols = [id_col] if isinstance(id_col, str) else list(id_col)
     spark = df.sparkSession
     # Materialize the (ids, weight) projection ONCE before the range

@@ -428,7 +428,7 @@ GROUP BY coalesce(o_channel, '(legacy)')
 def _evolved_table(sess: SeccoSession) -> str:
     """Additive schema evolution without history rewrite: v0 files lack
     ``o_channel``; the v1 append introduces it; the snapshot read
-    reconciles (mergeSchema) so legacy rows serve NULL. The alternative —
+    uses the manifest's schema, so legacy rows serve NULL. The alternative —
     rewriting every historical file to add the column — is exactly the
     O(table) cost this avoids at 100 TB."""
     import seccosql_spark.operators.lakehouse as _ops
@@ -604,7 +604,7 @@ def _merge_evolved_table(sess: SeccoSession) -> str:
 def lakehouse_merge_evolution(sess: SeccoSession):
     """Schema evolution on the MERGE path: an upsert batch carrying a NEW
     column rewrites only its touched partitions (manifest audit proves the
-    carry-by-reference), legacy rows serve NULL through the mergeSchema
+    carry-by-reference), legacy rows serve NULL through the schema-pinned
     read, and grouped totals must equal the oracle's logical replay."""
     table = _merge_evolved_table(sess)
     m = read_manifest(table, 1)
@@ -626,7 +626,7 @@ def lakehouse_merge_evolution(sess: SeccoSession):
 def lakehouse_schema_evolution(sess: SeccoSession):
     """Additive column evolution: the appended batch introduces
     ``o_channel``; legacy files are NOT rewritten and serve NULL through
-    the mergeSchema snapshot read — grouped totals must equal the logical
+    the schema-pinned snapshot read — grouped totals must equal the logical
     replay (legacy rows in the '(legacy)' bucket)."""
     table = _evolved_table(sess)
     return (

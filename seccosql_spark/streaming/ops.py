@@ -31,6 +31,7 @@ horizontally. No driver-side loops, no collect.
 
 from __future__ import annotations
 
+import json
 from collections.abc import Iterator
 from typing import Any
 
@@ -60,6 +61,26 @@ def events_schema(ts_type: T.DataType | None = None) -> T.StructType:
 EVENTS_SCHEMA = events_schema()
 
 
+def ts_reads_as_long(path: str) -> bool:
+    """Whether ``ts`` in the parquet file (or the first data file under the
+    directory) at ``path`` reads as BIGINT under ``nanosAsLong``: physical
+    INT64 that is TIMESTAMP(NANOS) or carries no timestamp annotation.
+    INT64 TIMESTAMP(MILLIS|MICROS) and INT96 read as timestamps. Footer
+    only, through pyarrow — no Spark job. The parquet schema is checked,
+    not the Arrow type, because pyarrow reports INT96 as timestamp[ns]."""
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    found = ds.dataset(path, format="parquet")
+    with found.filesystem.open_input_file(min(found.files)) as f:
+        schema = pq.ParquetFile(f).schema
+    col = schema.column(schema.names.index("ts"))
+    if col.physical_type != "INT64":
+        return False
+    lt = col.logical_type
+    return lt.type != "TIMESTAMP" or json.loads(lt.to_json())["timeUnit"] == "nanoseconds"
+
+
 def stream_events(spark: SparkSession, path: str) -> DataFrame:
     """File-source stream over parquet events (one file = one micro-batch
     unit; in production this is Kafka/files — same downstream plan).
@@ -67,14 +88,13 @@ def stream_events(spark: SparkSession, path: str) -> DataFrame:
     readStream needs a declared schema, and the right one depends on the
     parquet generation: TIMESTAMP(MICROS) surfaces as a timestamp type,
     while a TIMESTAMP(NANOS) file under ``nanosAsLong`` surfaces as INT64.
-    One batch-metadata read probes the actual encoding (footer-only — no
-    data scan). A timestamp-encoded generation is declared as tz-aware
-    TIMESTAMP (watermarks reject TIMESTAMP_NTZ; under the UTC session
+    A footer read (``ts_reads_as_long``) probes the actual encoding. A
+    timestamp-encoded generation is declared as tz-aware TIMESTAMP
+    (watermarks reject TIMESTAMP_NTZ; under the UTC session
     timezone the instants are identical), and a NANOS/long generation is
     declared LONG then normalized to TIMESTAMP — so watermarks and windows
     work identically for either generation."""
-    ts_type = spark.read.parquet(path).schema["ts"].dataType
-    if isinstance(ts_type, T.LongType):  # nanos-as-long generation
+    if ts_reads_as_long(path):  # nanos-as-long generation
         stream = spark.readStream.schema(events_schema(T.LongType())).parquet(path)
         # integer `div`, NOT float division: ns values past 2^53 lose exact
         # integer representation as doubles, shifting ~1.6% of timestamps by
@@ -88,13 +108,12 @@ def stream_events_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream source requires a DIRECTORY basePath, so the single
     `events.parquet` is selected with pathGlobFilter. Same encoding probe
     and NANOS normalization as `stream_events`."""
-    ts_type = spark.read.parquet(f"{sf_dir}/events.parquet").schema["ts"].dataType
     reader = lambda t: (  # noqa: E731 — two-line branch, not worth a def
         spark.readStream.schema(events_schema(t))
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    if isinstance(ts_type, T.LongType):
+    if ts_reads_as_long(f"{sf_dir}/events.parquet"):
         # integer `div` for exactness past 2^53 — see stream_events
         return reader(T.LongType()).withColumn(
             "ts", F.timestamp_micros(F.expr("ts div 1000"))

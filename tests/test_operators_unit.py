@@ -281,6 +281,19 @@ def test_pack_by_budget_fanout_derived_from_observed_rows(spark):
         cum += w
 
 
+def test_pack_by_budget_rejects_budget_below_one(spark):
+    """A budget below 1 would integer-divide by zero, which Spark turns
+    into NULL shards for every row; it must raise instead."""
+    import pytest
+
+    from seccosql_spark.operators.packing import pack_by_budget
+
+    df = spark.createDataFrame([(1, 10)], "doc_id LONG, n_tokens INT")
+    for budget in (0, -5, 0.5):
+        with pytest.raises(ValueError, match="need budget >= 1"):
+            pack_by_budget(df, budget=budget)
+
+
 def test_pack_by_budget_shards_are_contiguous(spark):
     from seccosql_spark.operators.packing import pack_by_budget
 

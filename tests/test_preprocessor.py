@@ -694,7 +694,7 @@ def test_sql_insert_into_statement(sess, tmp_path):
     d = _mk_table(sess, tmp_path)
     files_before = {f["path"] for f in read_manifest(d)["files"]}
     # schema enforcement on write: an unannotated 21.0 literal is
-    # DECIMAL(3,1), which would brick every later mergeSchema read of the
+    # DECIMAL(3,1), which would brick every later snapshot read of the
     # DOUBLE column — the commit must reject it, not the readers
     with pytest.raises(ValueError, match="incompatible"):
         sess.sql(

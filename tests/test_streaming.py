@@ -15,6 +15,7 @@ from seccosql_spark.streaming.ops import (
     stream_dedup,
     stream_events,
     stream_upsert_state,
+    ts_reads_as_long,
     windowed_agg,
 )
 from tests.conftest import SF_DIR
@@ -476,3 +477,31 @@ def test_scaled_stream_partitions_sizing_and_restore(spark, events_dir):
     restore = scaled_stream_partitions(spark, "s3://bucket/path")
     assert spark.conf.get("spark.sql.shuffle.partitions") == saved
     restore()
+
+
+def test_ts_encoding_probe_agrees_with_spark(spark, tmp_path):
+    """The pyarrow footer probe picks the same ``ts`` type Spark's parquet
+    reader infers under the session's ``nanosAsLong``: INT64 MICROS/MILLIS
+    and INT96 read as timestamps, INT64 NANOS and unannotated INT64 as
+    BIGINT. INT96 is the trap: pyarrow reports it as timestamp[ns]."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import LongType
+
+    assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+    ns = pa.array([1_700_000_000_000_000_000, 1_700_000_100_000_000_000])
+    stamped = pa.table({"ts": ns.cast(pa.timestamp("ns")), "v": [1.0, 2.0]})
+    cases = {  # name -> (table, write options, reads as BIGINT)
+        "micros": (stamped, dict(coerce_timestamps="us"), False),
+        "millis": (stamped, dict(coerce_timestamps="ms"), False),
+        "nanos": (stamped, dict(version="2.6"), True),
+        "int96": (stamped, dict(use_deprecated_int96_timestamps=True), False),
+        "plain_int64": (pa.table({"ts": ns, "v": [1.0, 2.0]}), {}, True),
+    }
+    for name, (t, kwargs, want) in cases.items():
+        d = str(tmp_path / name)
+        os.makedirs(d)
+        pq.write_table(t, f"{d}/part-0.parquet", **kwargs)
+        spark_long = isinstance(spark.read.parquet(d).schema["ts"].dataType, LongType)
+        assert ts_reads_as_long(d) == spark_long == want, name
+        assert ts_reads_as_long(f"{d}/part-0.parquet") == want, name
