@@ -8,9 +8,9 @@ the heavy array-codegen pipelines into early timed slots and published 20x
 JIT-warmup artifacts as engine time):
 
 - the headline ORDER is pinned here, independent of registry order;
-- each query is warmed ADAPTIVELY — re-run until THREE consecutive runs
-  pairwise agree within 20% (max 7 runs; two-in-a-row through r16, which
-  declared convergence on the C2 ramp's shoulder and timed
+- each query is warmed ADAPTIVELY — re-run until each adjacent pair of
+  the last THREE runs agrees within 20% (max 7 runs; two-in-a-row through
+  r16, which declared convergence on the C2 ramp's shoulder and timed
   dedup_minhash_lsh's compilation hump as engine time — r16 driver 1.37s vs
   0.85 steady-state), because a single warmup pass does not reach C2 steady
   state for the giant generated methods (md5-array minhash, the
@@ -65,7 +65,7 @@ HEADLINE_ORDER = [
 
 WARMUP_MAX_RUNS = 7
 WARMUP_STABLE_RTOL = 0.20
-# Consecutive warmup runs that must pairwise agree within RTOL before timing
+# Warmup runs whose adjacent pairs must each agree within RTOL before timing
 # starts (r17, VERDICT r16 task 2): two-within-20% declared convergence on
 # the JIT RAMP of the generated md5-array loop (dedup_minhash_lsh's warmup
 # arrays show 0.9 -> 1.6 -> 2.4 -> 2.9 -> 0.8 humps: two adjacent ramp
@@ -291,39 +291,57 @@ def _cpu_canary(nproc: int) -> dict:
     }
 
 
-def _once(name: str, spark: SparkSession) -> tuple[float, int]:
-    t0 = time.perf_counter()
-    n = run(name, spark, SF_DIR).count()
-    return time.perf_counter() - t0, n
+def measure_runs(
+    once, warmups: int | None = 2
+) -> tuple[list[float], list[float], int]:
+    """The ONE measurement loop, for any ``once() -> rows`` callable (so
+    write-path measurements — each rep commits a DIFFERENT slice,
+    scripts/bench_slope.py's DELETE/INSERT rows — share the identical
+    discipline instead of pasting it). Warmup is `warmups` calls, or with
+    ``warmups=None`` ADAPTIVE: up to WARMUP_MAX_RUNS calls, stopping once
+    each adjacent pair of the last WARMUP_STABLE_RUNS runs agrees within
+    WARMUP_STABLE_RTOL. Then TIMED_RUNS timed calls, extended by
+    TIMED_RUNS_EXTRA when their spread exceeds VARIANCE_SPREAD_FACTOR.
+    Returns (warmup_sec, timed_sec, rows)."""
+    n = 0
+    warm: list[float] = []
+    timed: list[float] = []
+
+    def call(into: list[float]) -> None:
+        nonlocal n
+        t0 = time.perf_counter()
+        n = once()
+        into.append(time.perf_counter() - t0)
+
+    for _ in range(WARMUP_MAX_RUNS if warmups is None else warmups):
+        call(warm)
+        if (
+            warmups is None
+            and len(warm) >= WARMUP_STABLE_RUNS
+            and all(
+                abs(warm[-k] - warm[-k - 1]) <= WARMUP_STABLE_RTOL * warm[-k - 1]
+                for k in range(1, WARMUP_STABLE_RUNS)
+            )
+        ):
+            break
+    for _ in range(TIMED_RUNS):
+        call(timed)
+    if max(timed) > VARIANCE_SPREAD_FACTOR * min(timed):
+        for _ in range(TIMED_RUNS_EXTRA):
+            call(timed)
+    return warm, timed, n
 
 
 def timed_median_call(
     once, warmups: int = 2, spark: SparkSession | None = None
 ) -> tuple[float, int, bool]:
-    """The ONE measurement loop behind timed_median, generalized to any
-    ``once() -> rows`` callable so write-path measurements (each rep
-    commits a DIFFERENT slice — scripts/bench_slope.py's DELETE/INSERT
-    rows) share the identical discipline instead of pasting it: `warmups`
-    warmup calls, TIMED_RUNS timed calls extended by TIMED_RUNS_EXTRA when
-    the spread exceeds VARIANCE_SPREAD_FACTOR, cache cleared after when a
-    session is given. Returns (median_sec, rows, extended)."""
-    n = 0
-    timed: list[float] = []
-    for _ in range(warmups):
-        n = once()
-    for _ in range(TIMED_RUNS):
-        t0 = time.perf_counter()
-        n = once()
-        timed.append(time.perf_counter() - t0)
-    extended = max(timed) > VARIANCE_SPREAD_FACTOR * min(timed)
-    if extended:
-        for _ in range(TIMED_RUNS_EXTRA):
-            t0 = time.perf_counter()
-            n = once()
-            timed.append(time.perf_counter() - t0)
+    """``measure_runs`` with `warmups` fixed warmup calls, reduced to the
+    median timed run; cache cleared after when a session is given.
+    Returns (median_sec, rows, extended)."""
+    _warm, timed, n = measure_runs(once, warmups)
     if spark is not None:
         spark.catalog.clearCache()
-    return sorted(timed)[len(timed) // 2], n, extended
+    return sorted(timed)[len(timed) // 2], n, len(timed) > TIMED_RUNS
 
 
 def timed_median(
@@ -379,32 +397,12 @@ def main() -> None:
             load0 = os.getloadavg()[0]
             host0 = _host_snapshot()
             canary0 = _cpu_canary(int(CPUS))
-            # adaptive warmup: run until two consecutive times agree within
-            # 20% — that's when codegen+JIT have converged and we are
-            # measuring the engine, not the JVM ramp
-            times: list[float] = []
-            for _ in range(WARMUP_MAX_RUNS):
-                dt, _n = _once(name, spark)
-                times.append(dt)
-                # converged = the last WARMUP_STABLE_RUNS runs pairwise agree
-                # within RTOL (three-in-a-row; see the constant's comment)
-                if len(times) >= WARMUP_STABLE_RUNS and all(
-                    abs(times[-k] - times[-k - 1])
-                    <= WARMUP_STABLE_RTOL * times[-k - 1]
-                    for k in range(1, WARMUP_STABLE_RUNS)
-                ):
-                    break
-
-            n = 0
-            timed: list[float] = []
-            for _ in range(TIMED_RUNS):
-                dt, n = _once(name, spark)
-                timed.append(dt)
-            if max(timed) > VARIANCE_SPREAD_FACTOR * min(timed):
-                for _ in range(TIMED_RUNS_EXTRA):
-                    dt, n = _once(name, spark)
-                    timed.append(dt)
-            times.extend(timed)
+            # adaptive warmup, so the timed runs measure the engine once
+            # codegen+JIT have converged, not the JVM ramp
+            warm, timed, n = measure_runs(
+                lambda: run(name, spark, SF_DIR).count(), warmups=None
+            )
+            times = warm + timed
             # PRIMARY: median of the timed runs — one CPU-steal burst (this
             # VM swings identical runs 2s<->14s) cannot drag it, and unlike
             # min it cannot cherry-pick a lucky run either.
@@ -430,7 +428,7 @@ def main() -> None:
         # shows as one outlier in the raw array + elevated load; an engine
         # regression shows as a uniformly shifted array at idle load.
         runs_raw[name] = {
-            "warmup": [round(t, 3) for t in times[: len(times) - len(timed)]],
+            "warmup": [round(t, 3) for t in warm],
             "timed": [round(t, 3) for t in timed],
             "load_before": round(load0, 1),
             "load_after": round(os.getloadavg()[0], 1),

@@ -6,7 +6,7 @@ session/day) and reports, per snapshot:
 
   rule 1: no per-query timed spread (max/min) > 2.0
   rule 2: no query median > 3x its best median across ALL given snapshots
-  rule 3: every query's canary_before healthy
+  rule 3: every query's canary_before present and healthy
           (single_sec <= 0.5, nproc_wall_sec <= 2.0)
 
 and which snapshot is the LAST qualifying one (the one the rule commits —
@@ -34,10 +34,13 @@ def evaluate(paths: list[str]) -> int | None:
     for i, (p, d) in enumerate(zip(paths, docs)):
         viol = []
         for q, r in d["runs_raw"].items():
-            c = r.get("canary_before", {})
+            c = r.get("canary_before")
             if (r.get("spread") or 0) > 2.0:
                 viol.append(f"rule1 {q} spread={r['spread']}")
-            if c and (c.get("single_sec", 0) > 0.5 or c.get("nproc_wall_sec", 0) > 2.0):
+            # a missing canary is unproven health, not a pass
+            if not c:
+                viol.append(f"rule3 {q} canary missing")
+            elif c.get("single_sec", 0) > 0.5 or c.get("nproc_wall_sec", 0) > 2.0:
                 viol.append(f"rule3 {q} canary={c}")
         for q, t in d["result"]["queries"].items():
             if t > 3.0 * best[q]:

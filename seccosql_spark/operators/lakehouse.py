@@ -39,11 +39,13 @@ Layout::
                                 "delete_files": [{"path", "keys",
                                                   "version"}, ...],
                                 "txns": {app_id: txn_version}}
-      data/p=<partition>/v00000-<token>.parquet
+      data/p=<partition>/v00000-<token>[-<i>].parquet
       deletes/d00001-<token>.parquet
 
 File names carry a writer-unique token so racing commit attempts never
-collide on disk; the atomic manifest create stays the sole commit arbiter
+collide on disk; a write that lands several files in one partition
+(``files_per_partition``, clustered compaction) numbers them ``-0``,
+``-1``, ... (manifests hold the paths; nothing parses the names); the atomic manifest create stays the sole commit arbiter
 (the loser removes its orphan files and retries). Per-file ``stats``
 (column min/max from the parquet footer) drive ``scan_table``'s file
 skipping; ``added_at`` drives the equality-delete sequence rule
@@ -60,6 +62,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 from urllib.parse import quote, unquote
 
 from pyspark.sql import DataFrame, SparkSession
@@ -213,6 +216,11 @@ def _file_column_stats(path: str) -> dict:
     return stats
 
 
+def _schema(m: dict) -> StructType:
+    """The table schema a manifest records (callers check it has one)."""
+    return StructType.fromJson(json.loads(m["schema"]))
+
+
 def _evolved_schema_json(base: dict | None, *dfs: DataFrame) -> str:
     """Manifest-tracked table schema: the previous manifest's schema plus
     any new columns this commit's batches introduce (additive evolution).
@@ -222,7 +230,7 @@ def _evolved_schema_json(base: dict | None, *dfs: DataFrame) -> str:
     fields: list = []
     names: set[str] = set()
     if base is not None and base.get("schema"):
-        for f in StructType.fromJson(json.loads(base["schema"])).fields:
+        for f in _schema(base).fields:
             fields.append(f)
             names.add(f.name)
     for df in dfs:
@@ -265,10 +273,7 @@ def _check_schema_compatible(m: dict, df: DataFrame, context: str) -> None:
             return ST([SF(f.name, canon(f.dataType), True) for f in dt.fields])
         return dt
 
-    table_types = {
-        f.name: f.dataType
-        for f in StructType.fromJson(json.loads(m["schema"])).fields
-    }
+    table_types = {f.name: f.dataType for f in _schema(m).fields}
     bad = [
         (f.name, f.dataType.simpleString(), table_types[f.name].simpleString())
         for f in df.schema.fields
@@ -362,16 +367,30 @@ def deterministic_commit_clock(
     return _ctx()
 
 
-def _carried_meta(m: dict) -> dict:
-    """Table-level metadata every commit carries forward verbatim from the
-    base manifest — the partition-transform semantics version (see
-    TRANSFORM_VERSION: a table keeps the derivation rule it was created
-    with, forever) and the CHECK-constraint map (enforced on every
-    row-adding commit until dropped)."""
-    meta = {"transform_version": m.get("transform_version", 1)}
+def _successor(m: dict, **changes) -> dict:
+    """The manifest a commit on top of base ``m`` publishes: the next
+    version carrying everything forward from the base — partition spec,
+    partition-transform semantics version (see TRANSFORM_VERSION: a table
+    keeps the derivation rule it was created with, forever), the
+    CHECK-constraint map (enforced on every row-adding commit until
+    dropped), schema, live files, outstanding delete files and the txn
+    ledger, each a fresh copy — with ``changes`` (the commit's own edits
+    and audit fields) applied on top. Every commit kind except
+    ``create_table`` builds its manifest here, so what a version inherits
+    is decided in one place."""
+    out = {
+        "version": m["version"] + 1,
+        "partition_by": m["partition_by"],
+        "transform_version": m.get("transform_version", 1),
+        "schema": m.get("schema"),
+        "files": [dict(f) for f in m["files"]],
+        "delete_files": [dict(d) for d in m.get("delete_files") or []],
+        "txns": dict(m.get("txns", {})),
+    }
     if m.get("constraints"):
-        meta["constraints"] = dict(m["constraints"])
-    return meta
+        out["constraints"] = dict(m["constraints"])
+    out.update(changes)
+    return out
 
 
 def _check_constraints(m: dict, df: DataFrame, context: str) -> None:
@@ -450,11 +469,12 @@ def _commit_manifest(table_dir: str, version: int, manifest: dict) -> None:
             pass
 
 
-def _commit_or_cleanup(table_dir: str, version: int, manifest: dict) -> dict:
+def _commit_or_cleanup(table_dir: str, manifest: dict) -> dict:
     """Commit the manifest; if another writer won the version race, remove
     the data/delete files THIS attempt wrote (everything stamped with this
     version — referenced by no committed manifest) before re-raising, so
     ``with_commit_retry`` loops leave no orphan files behind."""
+    version = manifest["version"]
     try:
         _commit_manifest(table_dir, version, manifest)
     except CommitConflictError:
@@ -474,15 +494,22 @@ def _commit_or_cleanup(table_dir: str, version: int, manifest: dict) -> dict:
     return manifest
 
 
-def latest_version(table_dir: str) -> int:
-    mdir = os.path.join(table_dir, _MANIFESTS)
-    versions = [
-        int(f[1:6]) for f in os.listdir(mdir)
+def _versions(table_dir: str) -> list[int]:
+    """Committed manifest versions, ascending: ``v<N>.json`` files only —
+    publish temps (``_tmp_v*``) are never committed state."""
+    return sorted(
+        int(f[1:6]) for f in os.listdir(os.path.join(table_dir, _MANIFESTS))
         if f.startswith("v") and f.endswith(".json")
-    ]
+    )
+
+
+def latest_version(table_dir: str) -> int:
+    versions = _versions(table_dir)
     if not versions:
-        raise FileNotFoundError(f"no manifests under {mdir}")
-    return max(versions)
+        raise FileNotFoundError(
+            f"no manifests under {os.path.join(table_dir, _MANIFESTS)}"
+        )
+    return versions[-1]
 
 
 def read_manifest(table_dir: str, version: int | None = None) -> dict:
@@ -504,37 +531,58 @@ def _write_token() -> str:
     return uuid.uuid4().hex[:8]
 
 
-def _write_partition_file(
+def _land(
+    tmp: str, table_dir: str, dest_dir: str, name: str,
+    partition: str | None, version: int,
+) -> list[dict]:
+    """The one landing step for Spark write output: move each parquet file
+    a write left in the staging dir ``tmp`` to its final name
+    ``dest_dir/<name>[-<i>].parquet`` (the index only when the write
+    produced several files), build its manifest entry from the parquet
+    footer (row count and column stats — metadata only, no Spark job), and
+    remove ``tmp``. A zero-row file is dropped unless the write produced
+    nothing else: Spark's first task writes a file even when empty, which
+    for a range-clustered write is an empty range bucket, while a
+    single-file write keeps its one (possibly empty) entry."""
+    os.makedirs(dest_dir, exist_ok=True)
+    parts = sorted(f for f in os.listdir(tmp) if f.endswith(".parquet"))
+    landed: list[tuple[str, int]] = []
+    for i, fn in enumerate(parts):
+        suffix = "" if len(parts) == 1 else f"-{i}"
+        final = os.path.join(dest_dir, f"{name}{suffix}.parquet")
+        os.replace(os.path.join(tmp, fn), final)
+        landed.append((final, _file_rows(final)))
+    shutil.rmtree(tmp)
+    keep = [fr for fr in landed if fr[1]] or landed[:1]
+    for final, _n in set(landed) - set(keep):
+        os.remove(final)
+    return [
+        {
+            "path": os.path.relpath(final, table_dir),
+            "partition": partition,
+            "rows": n_rows,
+            "added_at": version,
+            "stats": _file_column_stats(final),
+        }
+        for final, n_rows in keep
+    ]
+
+
+def _write_partition_files(
     df: DataFrame, table_dir: str, partition: str, version: int
-) -> dict:
-    """One parquet file per (partition, version, writer): versioned prefix
-    keeps manifest diffs auditable; the writer token keeps racing commit
-    attempts collision-free — and makes multiple rewrites of one partition
-    in a single commit (per-file delete purges) collision-free too. The
-    single-file write is per-PARTITION — at scale each partition's upsert
-    is itself a distributed job whose output would stay multi-file; one
-    file keeps the demo manifests exact while the plan shape (anti-join +
-    union, shuffle on keys) is the same."""
+) -> list[dict]:
+    """Write one partition's rows as they are partitioned — one file per
+    non-empty Spark partition (``coalesce(1)`` for a single file, a range or
+    z-order split for clustered compaction) — under a (partition, version,
+    writer) name: the versioned prefix keeps manifest diffs auditable; the
+    writer token keeps racing commit attempts collision-free — and makes
+    multiple rewrites of one partition in a single commit (per-file delete
+    purges) collision-free too."""
     part_dir = os.path.join(table_dir, _DATA, f"p={_escape_partition(partition)}")
     name = f"v{version:05d}-{_write_token()}"
     tmp = os.path.join(part_dir, f"_tmp_{name}")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    data_file = next(
-        f for f in os.listdir(tmp) if f.endswith(".parquet")
-    )
-    final = os.path.join(part_dir, f"{name}.parquet")
-    os.replace(os.path.join(tmp, data_file), final)
-    # drop the now-empty temp dir (and its _SUCCESS marker)
-    for leftover in os.listdir(tmp):
-        os.remove(os.path.join(tmp, leftover))
-    os.rmdir(tmp)
-    return {
-        "path": os.path.relpath(final, table_dir),
-        "partition": partition,
-        "rows": _file_rows(final),
-        "added_at": version,
-        "stats": _file_column_stats(final),
-    }
+    df.write.mode("overwrite").parquet(tmp)
+    return _land(tmp, table_dir, part_dir, name, partition, version)
 
 
 def _write_partitioned(
@@ -558,8 +606,8 @@ def _write_partitioned(
     partition's rewrite must not be one task); the manifest already carries
     N files per partition via the ``-{i}`` suffix and every reader unions
     a partition's live files."""
-    token = _write_token()
-    tmp = os.path.join(table_dir, f"_tmp_v{version:05d}-{token}")
+    name = f"v{version:05d}-{_write_token()}"
+    tmp = os.path.join(table_dir, f"_tmp_{name}")
     out = df.withColumn(_PCOL, _partition_expr(partition_by, df, utc))
     if files_per_partition > 1:
         salt = F.pmod(
@@ -590,27 +638,9 @@ def _write_partitioned(
         # recovers the raw value; our own layout re-escapes it
         raw = unquote(d[len(_PCOL) + 1:])
         part_dir = os.path.join(table_dir, _DATA, f"p={_escape_partition(raw)}")
-        os.makedirs(part_dir, exist_ok=True)
-        parts = sorted(
-            f for f in os.listdir(os.path.join(tmp, d)) if f.endswith(".parquet")
+        files += _land(
+            os.path.join(tmp, d), table_dir, part_dir, name, raw, version
         )
-        for i, name in enumerate(parts):
-            suffix = "" if len(parts) == 1 else f"-{i}"
-            final = os.path.join(
-                part_dir, f"v{version:05d}-{token}{suffix}.parquet"
-            )
-            os.replace(os.path.join(tmp, d, name), final)
-            files.append(
-                {
-                    "path": os.path.relpath(final, table_dir),
-                    "partition": raw,
-                    "rows": _file_rows(final),
-                    "added_at": version,
-                    "stats": _file_column_stats(final),
-                }
-            )
-    import shutil
-
     shutil.rmtree(tmp)
     return files
 
@@ -632,8 +662,7 @@ def create_table(
         "schema": _evolved_schema_json(None, df),
         "files": files,
     }
-    _commit_or_cleanup(table_dir, 0, manifest)
-    return manifest
+    return _commit_or_cleanup(table_dir, manifest)
 
 
 def _delete_may_touch(entry: dict, delete: dict) -> bool:
@@ -691,10 +720,9 @@ def _read_entries(
     applicable-delete set; each group anti-joins the delete key files
     (broadcast — delete files are key-only and batch-sized) and the groups
     union back. With no delete files this is a single read."""
-    schema = m.get("schema")
     reader = (
-        spark.read.schema(StructType.fromJson(json.loads(schema)))
-        if schema
+        spark.read.schema(_schema(m))
+        if m.get("schema")
         else spark.read.option("mergeSchema", "true")
     )
     dels = m.get("delete_files") or []
@@ -734,14 +762,11 @@ def version_at(table_dir: str, timestamp: str) -> int:
     best stamped candidate — where its unknown commit time could straddle
     the probe — does the resolution raise (ADVICE r14)."""
     target = _parse_commit_ts(timestamp)
-    mdir = os.path.join(table_dir, _MANIFESTS)
     best: int | None = None
     earliest: str | None = None
     unstamped: list[int] = []
-    for fn in sorted(os.listdir(mdir)):
-        if not (fn.startswith("v") and fn.endswith(".json")):
-            continue
-        m = read_manifest(table_dir, int(fn[1:6]))
+    for v in _versions(table_dir):
+        m = read_manifest(table_dir, v)
         at = m.get("committed_at")
         if at is None:
             unstamped.append(m["version"])
@@ -809,9 +834,7 @@ def read_table(
                 f"manifest v{m['version']} of {table_dir} lists no files and "
                 "records no schema — cannot construct the empty snapshot"
             )
-        return spark.createDataFrame(
-            [], StructType.fromJson(json.loads(m["schema"]))
-        )
+        return spark.createDataFrame([], _schema(m))
     return _read_entries(spark, table_dir, m, m["files"])
 
 
@@ -862,14 +885,12 @@ def scan_table(
         "files_skipped": len(m["files"]) - len(keep),
     }
     if not keep:
-        schema = m.get("schema")
-        if not schema:
+        if not m.get("schema"):
             raise ValueError(
                 f"scan of {table_dir} pruned every file and the manifest "
                 "records no schema — cannot construct the empty result"
             )
-        empty = spark.createDataFrame([], StructType.fromJson(json.loads(schema)))
-        return empty, audit
+        return spark.createDataFrame([], _schema(m)), audit
     df = _read_entries(spark, table_dir, m, keep)
     return df.where(F.col(column).between(F.lit(lo), F.lit(hi))), audit
 
@@ -899,9 +920,7 @@ def delete_commit(
         # a typo'd key would otherwise commit a delete file whose read-side
         # anti-join fails on every subsequent snapshot — bricking the table
         # until manual manifest surgery (purge_deletes reads too)
-        table_cols = {
-            f.name for f in StructType.fromJson(json.loads(m["schema"])).fields
-        }
+        table_cols = {f.name for f in _schema(m).fields}
         unknown = [k for k in keys if k not in table_cols]
         if unknown:
             raise ValueError(
@@ -914,7 +933,6 @@ def delete_commit(
     # is read with its own inferred schema, never the table's, so
     # cross-type keys are safe
     ddir = os.path.join(table_dir, "deletes")
-    os.makedirs(ddir, exist_ok=True)
     name = f"d{version:05d}-{_write_token()}"
     tmp = os.path.join(ddir, f"_tmp_{name}")
     kdf = deletes.select(*keys)
@@ -924,32 +942,18 @@ def delete_commit(
         # same frame (review r15)
         kdf = kdf.distinct()
     kdf.coalesce(1).write.mode("overwrite").parquet(tmp)
-    data_file = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-    final = os.path.join(ddir, f"{name}.parquet")
-    os.replace(os.path.join(tmp, data_file), final)
-    for leftover in os.listdir(tmp):
-        os.remove(os.path.join(tmp, leftover))
-    os.rmdir(tmp)
-    manifest = {
-        "version": version,
-        "partition_by": m["partition_by"],
-        **_carried_meta(m),
-        "schema": m.get("schema"),
-        "files": [dict(f) for f in m["files"]],
-        "txns": dict(m.get("txns", {})),
-        "delete_files": [dict(d) for d in m.get("delete_files") or []]
-        + [
-            {
-                "path": os.path.relpath(final, table_dir),
-                "keys": list(keys),
-                "stats": _file_column_stats(final),
-                "rows": _file_rows(final),
-                "version": version,
-            }
-        ],
-    }
-    _commit_or_cleanup(table_dir, version, manifest)
-    return manifest
+    (landed,) = _land(tmp, table_dir, ddir, name, None, version)
+    manifest = _successor(m)
+    manifest["delete_files"].append(
+        {
+            "path": landed["path"],
+            "keys": list(keys),
+            "stats": landed["stats"],
+            "rows": landed["rows"],
+            "version": version,
+        }
+    )
+    return _commit_or_cleanup(table_dir, manifest)
 
 
 def purge_deletes(spark: SparkSession, table_dir: str) -> dict:
@@ -970,23 +974,15 @@ def purge_deletes(spark: SparkSession, table_dir: str) -> dict:
             carried += 1
             continue
         rewritten += 1
-        clean = _read_entries(spark, table_dir, m, [f])
-        files.append(
-            _write_partition_file(clean, table_dir, f["partition"], version)
-        )
-    manifest = {
-        "version": version,
-        "partition_by": m["partition_by"],
-        **_carried_meta(m),
-        "schema": m.get("schema"),
-        "files": files,
-        "delete_files": [],
-        "txns": dict(m.get("txns", {})),
-        "files_rewritten": rewritten,
-        "files_carried": carried,
-    }
-    _commit_or_cleanup(table_dir, version, manifest)
-    return manifest
+        clean = _read_entries(spark, table_dir, m, [f]).coalesce(1)
+        files += _write_partition_files(clean, table_dir, f["partition"], version)
+    return _commit_or_cleanup(
+        table_dir,
+        _successor(
+            m, files=files, delete_files=[],
+            files_rewritten=rewritten, files_carried=carried,
+        ),
+    )
 
 
 def append_commit(
@@ -1022,101 +1018,23 @@ def append_commit(
         raise ValueError(f"inserts must carry the partition column {pcol!r}")
     _check_schema_compatible(m, inserts, "append_commit")
     _check_constraints(m, inserts, "append_commit")
-    # carry file entries VERBATIM — projecting to a fixed key set silently
-    # dropped later-added metadata (column stats) from carried files
-    files = [dict(f) for f in m["files"]]
     # one job, one scan of the batch, regardless of touched-partition count
     new_files = _write_partitioned(
         inserts, table_dir, pcol, version, utc=_transform_utc(m)
     )
-    files.extend(new_files)
-    manifest = {
-        "version": version,
-        "partition_by": pcol,
-        **_carried_meta(m),
-        "schema": _evolved_schema_json(m, inserts),
-        "files": files,
-        # outstanding equality deletes keep applying to the OLD files; the
-        # appended files post-date them (added_at = this version), so a
-        # re-insert of a deleted key correctly survives
-        "delete_files": [dict(d) for d in m.get("delete_files") or []],
-        "txns": (
-            {**m.get("txns", {}), txn[0]: txn[1]} if txn is not None
-            else dict(m.get("txns", {}))
-        ),
-        "appended_files": len(new_files),
-    }
-    _commit_or_cleanup(table_dir, version, manifest)
-    return manifest
-
-
-def _write_clustered_files(
-    clustered: DataFrame, table_dir: str, partition: str, version: int
-) -> list[dict]:
-    """Write an already-partitioned-and-sorted DataFrame as one manifest
-    entry per non-empty output file — the shared landing step for the
-    sorted (1-D range) and z-ordered (multi-D) compaction layouts."""
-    part_dir = os.path.join(table_dir, _DATA, f"p={_escape_partition(partition)}")
-    name = f"v{version:05d}-{_write_token()}"
-    tmp = os.path.join(part_dir, f"_tmp_{name}")
-    clustered.write.mode("overwrite").parquet(tmp)
-    out: list[dict] = []
-    for i, fn in enumerate(
-        sorted(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-    ):
-        final = os.path.join(part_dir, f"{name}-s{i}.parquet")
-        os.replace(os.path.join(tmp, fn), final)
-        n_rows = _file_rows(final)
-        if n_rows == 0:  # empty range bucket: drop, don't track
-            os.remove(final)
-            continue
-        out.append(
-            {
-                "path": os.path.relpath(final, table_dir),
-                "partition": partition,
-                "rows": n_rows,
-                "added_at": version,
-                "stats": _file_column_stats(final),
-            }
-        )
-    import shutil
-
-    shutil.rmtree(tmp)
-    return out
-
-
-def _write_range_clustered(
-    df: DataFrame, table_dir: str, partition: str, version: int,
-    sort_by: str, target_files: int,
-) -> list[dict]:
-    """Write one partition's rows as up to ``target_files`` RANGE-CLUSTERED
-    files on ``sort_by``: repartitionByRange gives each output file a
-    disjoint key range, sortWithinPartitions orders rows inside it — so the
-    manifest's per-file min/max bounds stay tight and ``scan_table``'s
-    skipping keeps working after compaction (a plain bin-pack into one
-    wide file would destroy the clustering a range-batched ingest had).
-    This is the OPTIMIZE + sort-order story at file granularity."""
-    clustered = df.repartitionByRange(
-        target_files, F.col(sort_by)
-    ).sortWithinPartitions(sort_by)
-    return _write_clustered_files(clustered, table_dir, partition, version)
-
-
-def _write_zorder_clustered(
-    df: DataFrame, table_dir: str, partition: str, version: int,
-    zorder_by: list[str], target_files: int,
-) -> list[dict]:
-    """Multi-dimensional clustering (OPTIMIZE ... ZORDER BY twin): rows are
-    range-split on their Morton z-value (``operators/layout.zorder_layout``
-    — normalized bit-interleave, one shuffle), so EVERY z-order column gets
-    moderately tight per-file min/max bounds and ``scan_table`` can skip
-    files on range probes against ANY of them — the layout for tables
-    probed on more than one dimension, where a 1-D sort gives perfect
-    bounds on one column and useless bounds on the rest."""
-    from seccosql_spark.operators.layout import zorder_layout
-
-    clustered = zorder_layout(df, zorder_by, num_partitions=target_files)
-    return _write_clustered_files(clustered, table_dir, partition, version)
+    # carried file entries stay VERBATIM — projecting to a fixed key set
+    # silently dropped later-added metadata (column stats). Outstanding
+    # equality deletes keep applying to the OLD files; the appended files
+    # post-date them (added_at = this version), so a re-insert of a
+    # deleted key correctly survives
+    manifest = _successor(
+        m, schema=_evolved_schema_json(m, inserts),
+        appended_files=len(new_files),
+    )
+    manifest["files"] += new_files
+    if txn is not None:
+        manifest["txns"][txn[0]] = txn[1]
+    return _commit_or_cleanup(table_dir, manifest)
 
 
 def _partitions_matching(spark: SparkSession, m: dict, where: str) -> set[str]:
@@ -1156,11 +1074,19 @@ def compact(
 
     With ``sort_by``/``target_files``, each compacted partition is written
     as up to ``target_files`` range-clustered files on the sort column
-    instead of one wide file — preserving (or creating) the tight per-file
-    min/max bounds that ``scan_table``'s data skipping needs.
+    instead of one wide file: repartitionByRange gives each output file a
+    disjoint key range, sortWithinPartitions orders rows inside it — so the
+    manifest's per-file min/max bounds stay tight and ``scan_table``'s
+    skipping keeps working after compaction (a plain bin-pack into one
+    wide file would destroy the clustering a range-batched ingest had).
+    This is the OPTIMIZE + sort-order story at file granularity.
     ``zorder_by`` clusters on the Morton z-value of SEVERAL columns instead
-    (mutually exclusive with ``sort_by``), trading perfect 1-D bounds for
-    usable bounds on every listed dimension.
+    (OPTIMIZE ... ZORDER BY twin, mutually exclusive with ``sort_by``): rows
+    are range-split on their normalized bit-interleave
+    (``operators/layout.zorder_layout``, one shuffle), so EVERY listed
+    column gets moderately tight per-file bounds — the layout for tables
+    probed on more than one dimension, where a 1-D sort gives perfect
+    bounds on one column and useless bounds on the rest.
 
     ``where`` scopes the rewrite to the partitions whose VALUE satisfies
     the predicate (Delta's ``OPTIMIZE ... WHERE`` twin) — at 100 TB nobody
@@ -1179,7 +1105,6 @@ def compact(
             f"(got {target_files})"
         )
     m = read_manifest(table_dir)
-    pcol = m["partition_by"]
     version = m["version"] + 1
     selected = _partitions_matching(spark, m, where) if where is not None else None
     by_partition: dict[str, list[dict]] = {}
@@ -1210,36 +1135,25 @@ def compact(
         # compacted file post-dates them, so they'd otherwise resurrect);
         # carried files keep taking them at read time.
         merged = _read_entries(spark, table_dir, m, group)
-        if zorder_by is not None and target_files > 1:
-            files.extend(
-                _write_zorder_clustered(
-                    merged, table_dir, p, version, zorder_by, target_files
-                )
-            )
-        elif sort_by is not None and target_files > 1:
-            files.extend(
-                _write_range_clustered(
-                    merged, table_dir, p, version, sort_by, target_files
-                )
-            )
+        if zorder_by is not None:
+            from seccosql_spark.operators.layout import zorder_layout
+
+            merged = zorder_layout(merged, zorder_by, num_partitions=target_files)
+        elif sort_by is not None:
+            merged = merged.repartitionByRange(
+                target_files, F.col(sort_by)
+            ).sortWithinPartitions(sort_by)
         else:
-            files.append(_write_partition_file(merged, table_dir, p, version))
-    manifest = {
-        "version": version,
-        "partition_by": pcol,
-        **_carried_meta(m),
-        "schema": m.get("schema"),
-        "files": files,
-        "delete_files": [dict(d) for d in m.get("delete_files") or []],
-        "txns": dict(m.get("txns", {})),
-        "partitions_compacted": compacted,
-        "partitions_carried": carried,
-    }
+            merged = merged.coalesce(1)
+        files += _write_partition_files(merged, table_dir, p, version)
+    manifest = _successor(
+        m, files=files,
+        partitions_compacted=compacted, partitions_carried=carried,
+    )
     if where is not None:
         manifest["partitions_pruned"] = pruned
         manifest["optimize_where"] = where
-    _commit_or_cleanup(table_dir, version, manifest)
-    return manifest
+    return _commit_or_cleanup(table_dir, manifest)
 
 
 def restore_table(
@@ -1260,19 +1174,13 @@ def restore_table(
     micro-batch double-land)."""
     src = read_manifest(table_dir, version)  # raises if expired/unknown
     head = read_manifest(table_dir)
-    new_version = head["version"] + 1
-    manifest = {
-        "version": new_version,
-        "partition_by": src["partition_by"],
-        **_carried_meta(src),
-        "schema": src.get("schema"),
-        "files": [dict(f) for f in src["files"]],
-        "delete_files": [dict(d) for d in src.get("delete_files") or []],
-        "txns": dict(head.get("txns", {})),
-        "restored_from": version,
-    }
-    _commit_or_cleanup(table_dir, new_version, manifest)
-    return manifest
+    return _commit_or_cleanup(
+        table_dir,
+        _successor(
+            src, version=head["version"] + 1,
+            txns=dict(head.get("txns", {})), restored_from=version,
+        ),
+    )
 
 
 def table_history(spark: SparkSession, table_dir: str) -> DataFrame:
@@ -1280,12 +1188,9 @@ def table_history(spark: SparkSession, table_dir: str) -> DataFrame:
     (inferred from the audit fields each commit type stamps), live file /
     delete-file counts, row total, and the copy-on-write audit. Pure
     manifest metadata: O(versions) driver work, zero data IO."""
-    mdir = os.path.join(table_dir, _MANIFESTS)
     rows = []
-    for fn in sorted(os.listdir(mdir)):
-        if not (fn.startswith("v") and fn.endswith(".json")):
-            continue
-        m = read_manifest(table_dir, int(fn[1:6]))
+    for v in _versions(table_dir):
+        m = read_manifest(table_dir, v)
         if "restored_from" in m:
             kind = "restore"
         elif "constraint_change" in m:
@@ -1484,20 +1389,13 @@ def add_constraint(
             "starts guarding (Delta's ADD CONSTRAINT contract)"
         )
     cons[name] = expr
-    version = m["version"] + 1
-    manifest = {
-        "version": version,
-        "partition_by": m["partition_by"],
-        **_carried_meta(m),
-        "schema": m.get("schema"),
-        "files": [dict(f) for f in m["files"]],
-        "delete_files": [dict(d) for d in m.get("delete_files") or []],
-        "txns": dict(m.get("txns", {})),
-        "constraints": cons,
-        "constraint_change": {"op": "add", "name": name},
-    }
-    _commit_or_cleanup(table_dir, version, manifest)
-    return manifest
+    return _commit_or_cleanup(
+        table_dir,
+        _successor(
+            m, constraints=cons,
+            constraint_change={"op": "add", "name": name},
+        ),
+    )
 
 
 def add_column(table_dir: str, name: str, ddl_type: str) -> dict:
@@ -1515,7 +1413,7 @@ def add_column(table_dir: str, name: str, ddl_type: str) -> dict:
             "metadata-only column additions (write a batch carrying the "
             "column instead)"
         )
-    st = StructType.fromJson(json.loads(m["schema"]))
+    st = _schema(m)
     if name.lower() in {f.name.lower() for f in st.fields}:
         raise ValueError(f"column {name!r} already exists")
     try:
@@ -1525,19 +1423,13 @@ def add_column(table_dir: str, name: str, ddl_type: str) -> dict:
             f"add_column: {ddl_type!r} is not a parseable DDL type"
         ) from exc
     evolved = StructType(list(st.fields) + [new_field])
-    version = m["version"] + 1
-    manifest = {
-        "version": version,
-        "partition_by": m["partition_by"],
-        **_carried_meta(m),
-        "schema": json.dumps(evolved.jsonValue()),
-        "files": [dict(f) for f in m["files"]],
-        "delete_files": [dict(d) for d in m.get("delete_files") or []],
-        "txns": dict(m.get("txns", {})),
-        "schema_change": {"op": "add_column", "name": name, "type": ddl_type},
-    }
-    _commit_or_cleanup(table_dir, version, manifest)
-    return manifest
+    return _commit_or_cleanup(
+        table_dir,
+        _successor(
+            m, schema=json.dumps(evolved.jsonValue()),
+            schema_change={"op": "add_column", "name": name, "type": ddl_type},
+        ),
+    )
 
 
 def drop_constraint(table_dir: str, name: str) -> dict:
@@ -1552,23 +1444,15 @@ def drop_constraint(table_dir: str, name: str) -> dict:
             f"(have: {sorted(cons) or 'none'})"
         )
     del cons[name]
-    version = m["version"] + 1
-    manifest = {
-        "version": version,
-        "partition_by": m["partition_by"],
-        **_carried_meta(m),
-        "schema": m.get("schema"),
-        "files": [dict(f) for f in m["files"]],
-        "delete_files": [dict(d) for d in m.get("delete_files") or []],
-        "txns": dict(m.get("txns", {})),
-        "constraints": cons,
-        "constraint_change": {"op": "drop", "name": name},
-    }
-    # the explicit "constraints" key sits after **_carried_meta in the
-    # literal, so it overrides the carried (pre-drop) map — including
+    # the explicit map overrides the carried (pre-drop) one — including
     # down to {} on the last drop
-    _commit_or_cleanup(table_dir, version, manifest)
-    return manifest
+    return _commit_or_cleanup(
+        table_dir,
+        _successor(
+            m, constraints=cons,
+            constraint_change={"op": "drop", "name": name},
+        ),
+    )
 
 
 def list_constraints(table_dir: str) -> dict:
@@ -1629,11 +1513,7 @@ def expire_versions(
     if keep_last < 1:
         raise ValueError(f"keep_last must be >= 1, got {keep_last}")
     latest = latest_version(table_dir)
-    mdir = os.path.join(table_dir, _MANIFESTS)
-    versions = sorted(
-        int(f[1:6]) for f in os.listdir(mdir)
-        if f.startswith("v") and f.endswith(".json")
-    )
+    versions = _versions(table_dir)
     tagged = set(list_tags(table_dir).values())
     kept = [v for v in versions if v > latest - keep_last or v in tagged]
     expired = [v for v in versions if v not in set(kept)]
@@ -1699,7 +1579,6 @@ def _sweep_orphan_data(
     reads never list directories), so this is pure garbage collection; the
     age gate keeps a live writer's finalize-to-publish window safe.
     Returns (dirs_removed, files_removed)."""
-    import shutil
     import time as _time
 
     now = _time.time()
@@ -1927,11 +1806,6 @@ def table_detail(spark: SparkSession, table_dir: str) -> DataFrame:
     the head commit instant. Manifest metadata plus O(live files) driver
     ``stat`` calls for the byte total — zero data IO."""
     m = read_manifest(table_dir)
-    mdir = os.path.join(table_dir, _MANIFESTS)
-    n_versions = sum(
-        1 for fn in os.listdir(mdir)
-        if fn.startswith("v") and fn.endswith(".json")
-    )
     size = 0
     for f in list(m["files"]) + list(m.get("delete_files") or []):
         try:
@@ -1948,7 +1822,7 @@ def table_detail(spark: SparkSession, table_dir: str) -> DataFrame:
             len({f["partition"] for f in m["files"]}),
             sum(f["rows"] for f in m["files"]),
             size,
-            n_versions,
+            len(_versions(table_dir)),
             len(list_tags(table_dir)),
             len(m.get("constraints") or {}),
             m.get("committed_at"),
@@ -2071,23 +1945,17 @@ def merge_cow(
     )
     updates.unpersist()
 
-    manifest = {
-        "version": version,
-        "partition_by": pcol,
-        **_carried_meta(m),
-        "schema": _evolved_schema_json(m, updates),
-        "files": files,
-        # deletes keep applying to carried files; rewritten files had them
-        # applied during the base read above
-        "delete_files": [dict(d) for d in m.get("delete_files") or []],
-        "txns": dict(m.get("txns", {})),
-        "partitions_rewritten": rewritten,
-        "partitions_carried": carried,
-        # recorded so table_changes(pair_updates=True) can pair a net
-        # delete+insert of the same key into update_pre/postimage — Delta
-        # CDF gets this for free by logging at write time; a post-hoc
-        # manifest diff needs to know what "same row" meant to the writer
-        "merge_keys": list(keys),
-    }
-    _commit_or_cleanup(table_dir, version, manifest)
-    return manifest
+    # deletes keep applying to carried files; rewritten files had them
+    # applied during the base read above. merge_keys is recorded so
+    # table_changes(pair_updates=True) can pair a net delete+insert of the
+    # same key into update_pre/postimage — Delta CDF gets this for free by
+    # logging at write time; a post-hoc manifest diff needs to know what
+    # "same row" meant to the writer
+    return _commit_or_cleanup(
+        table_dir,
+        _successor(
+            m, schema=_evolved_schema_json(m, updates), files=files,
+            partitions_rewritten=rewritten, partitions_carried=carried,
+            merge_keys=list(keys),
+        ),
+    )

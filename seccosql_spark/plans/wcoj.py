@@ -281,19 +281,22 @@ def wcoj_natural_join(
             rels.append((cols, rows))
         return rels
 
-    if all(s == 1 for s in shares.values()):
+    if num_tasks is None and all(s == 1 for s in shares.values()):
         # Degenerate grid: every row maps to the ONE cell, so the hypercube
         # exchange would shuffle everything into a single partition just to
         # regroup what is already a single group. Run the cell as one
         # coalesced mapInPandas task instead — no exchange, no AQE stage
         # job (r17; measured ~0.4s of pure job/exchange overhead on the
-        # sf0.1 triangle). This branch only fires when the share vector is
-        # all-ones, i.e. adaptive_num_tasks derived a single cell from the
-        # input size (< _ROWS_PER_CELL rows) — the same bounded small-input
-        # fast path as the SCC serial finish; any real-scale input fans out
-        # exactly as before. The iterator form accumulates ALL of the
-        # partition's batches before joining, so the whole-cell invariant
-        # mapInPandas batching would otherwise break is preserved.
+        # sf0.1 triangle). This branch only fires when adaptive_num_tasks
+        # DERIVED the single cell (num_tasks omitted) from the input size
+        # (< _ROWS_PER_CELL rows) — the same bounded small-input fast path
+        # as the SCC serial finish; any real-scale input fans out exactly
+        # as before. An explicit num_tasks=1 keeps the grouped path: the
+        # caller's input size is unknown here, and coalesce(1) would run
+        # the whole upstream scan in one task. The iterator form
+        # accumulates ALL of the partition's batches before joining, so the
+        # whole-cell invariant mapInPandas batching would otherwise break
+        # is preserved.
         def one_cell(batches):
             pdfs = list(batches)
             if not pdfs:

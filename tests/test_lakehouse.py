@@ -690,7 +690,7 @@ def test_random_commit_sequences_match_model(spark, tmp_path, seed):
             # becomes that version's dict; later ops build on top of it
             # (delete sequence rule, appends, feeds all must stay exact).
             # Constraints are table metadata — the restore resurrects the
-            # restored version's map (carried via _carried_meta), so the
+            # restored version's map (carried via _successor), so the
             # model's live-constraint flag follows cons_history.
             rv = rng.randrange(len(history))
             lh.restore_table(spark, d, rv)
@@ -1134,6 +1134,78 @@ def test_restore_table(spark, table):
     assert byty == {"insert": (1, 10.0), "delete": (1, -1.0)}
     with pytest.raises(FileNotFoundError):
         lh.restore_table(spark, table, 99)
+
+
+def test_every_commit_kind_carries_table_metadata(spark, table):
+    """Each commit kind's successor manifest keeps its base's table-level
+    metadata — partition spec, transform version, CHECK constraints,
+    schema, txn ledger and outstanding delete files — except the fields
+    that commit kind exists to change. A restore takes them from the
+    restored version, but the txn ledger from HEAD."""
+    import seccosql_spark.operators.lakehouse as lh
+
+    def batch(rows_):
+        return spark.createDataFrame(rows_, "k BIGINT, p STRING, v DOUBLE")
+
+    def carried(m):
+        return {
+            "partition_by": m["partition_by"],
+            "transform_version": m.get("transform_version", 1),
+            "constraints": m.get("constraints") or {},
+            "schema": m.get("schema"),
+            "txns": m.get("txns") or {},
+            "delete_files": m.get("delete_files") or [],
+        }
+
+    lh.add_constraint(spark, table, "v_pos", "v > 0.0")
+    lh.append_commit(spark, table, batch([(5, "a", 50.0)]), txn=("sink", 1))
+    start = carried(read_manifest(table))
+    assert start["constraints"] == {"v_pos": "v > 0.0"}
+    assert start["txns"] == {"sink": 1}
+    keys = spark.createDataFrame([(3,)], "k BIGINT")
+    steps = [
+        ("delete", lambda: lh.delete_commit(spark, table, keys, ["k"]),
+         {"delete_files"}),
+        ("append", lambda: lh.append_commit(
+            spark, table, batch([(6, "b", 60.0)]), txn=("sink", 2)),
+         {"txns"}),
+        ("compact", lambda: lh.compact(spark, table), set()),
+        ("add_constraint",
+         lambda: lh.add_constraint(spark, table, "k_pos", "k > 0"),
+         {"constraints"}),
+        ("drop_constraint", lambda: lh.drop_constraint(table, "k_pos"),
+         {"constraints"}),
+        ("add_column", lambda: lh.add_column(table, "note", "STRING"),
+         {"schema"}),
+        ("merge", lambda: merge_cow(spark, table, batch([(2, "a", 25.0)]), ["k"]),
+         set()),
+        ("purge", lambda: lh.purge_deletes(spark, table), {"delete_files"}),
+    ]
+    version_after: dict[str, int] = {}
+    for kind, commit, changes in steps:
+        base = read_manifest(table)
+        new = commit()
+        assert new == read_manifest(table), kind
+        assert new["version"] == base["version"] + 1, kind
+        was, now = carried(base), carried(new)
+        for field in was:
+            if field in changes:
+                assert now[field] != was[field], (kind, field)
+            else:
+                assert now[field] == was[field], (kind, field)
+        version_after[kind] = new["version"]
+    assert carried(new)["constraints"] == {"v_pos": "v > 0.0"}
+
+    src_v = version_after["delete"]
+    head = read_manifest(table)
+    src = read_manifest(table, src_v)
+    # the restored version differs from HEAD in every field a restore
+    # could get wrong: schema (no `note`), delete files and the txn ledger
+    for field in ("schema", "delete_files", "txns"):
+        assert carried(src)[field] != carried(head)[field], field
+    new = lh.restore_table(spark, table, src_v)
+    assert carried(new) == {**carried(src), "txns": carried(head)["txns"]}
+    assert rows(read_table(spark, table)) == rows(read_table(spark, table, src_v))
 
 
 def test_merge_hot_partition_multi_file(spark, table):

@@ -234,10 +234,12 @@ def test_pack_by_budget_composite_key_no_collision(spark):
 def test_pack_by_budget_fanout_derived_from_observed_rows(spark):
     """r17 (VERDICT r16 task 4): without an explicit num_partitions the
     range-partition fan-out must derive from the OBSERVED metadata row
-    count (clamped to [1, defaultParallelism]) instead of a static
-    defaultParallelism — 200 metadata rows get 1 partition, not 8+ task
-    launches through sample/shuffle/subtotal/window. Shard assignment is
-    partitioning-independent, so results are unchanged."""
+    count instead of a static defaultParallelism — 200 metadata rows get 1
+    partition, not 8+ task launches through sample/shuffle/subtotal/window.
+    The count is ceil(rows / rowsPerPartition) with no defaultParallelism
+    ceiling, so a corpus-sized input is not forced through core-count
+    partitions. Shard assignment is partitioning-independent, so results
+    are unchanged."""
     from seccosql_spark.operators.packing import _PACK_ROWS_KEY, pack_by_budget
 
     rows = [(i, (i * 37) % 90 + 10) for i in range(200)]
@@ -267,7 +269,16 @@ def test_pack_by_budget_fanout_derived_from_observed_rows(spark):
             got_fanned = {
                 r["doc_id"]: r["shard"] for r in pack_by_budget(df, budget=300).collect()
             }
-            assert seen == [4], seen  # ceil(200/50), still <= parallelism
+            assert seen == [4], seen  # ceil(200/50)
+            # one row per partition: 200 range partitions, above the
+            # session's defaultParallelism — the fan-out is not clamped
+            spark.conf.set(_PACK_ROWS_KEY, "1")
+            seen.clear()
+            got_per_row = {
+                r["doc_id"]: r["shard"] for r in pack_by_budget(df, budget=300).collect()
+            }
+            assert seen == [200], seen
+            assert got_per_row == got_fanned
         finally:
             spark.conf.unset(_PACK_ROWS_KEY)
         seen.clear()

@@ -62,9 +62,59 @@ def test_wcoj_on_string_keys(spark):
 
 
 def test_wcoj_empty_result(spark):
-    r = spark.createDataFrame([(1, 2)], "a BIGINT, b BIGINT")
-    s = spark.createDataFrame([(99, 100)], "b BIGINT, c BIGINT")
-    assert rows(wcoj_natural_join([r, s], num_tasks=4), ["a", "b", "c"]) == []
+    """An empty result keeps the declared schema, key types included, on
+    the derived single-cell path (``rel_sizes``, no exchange) and on the
+    hypercube path (``num_tasks=4``) — both when the relations' keys are
+    disjoint and when one relation is empty, where a cell's frame is built
+    from the column names alone."""
+    keys = {
+        "kb": "bigint", "kd": "date", "kt": "timestamp",
+        "kx": "decimal(10,2)", "ks": "string",
+    }
+
+    def rel(data, extra):
+        cols = [*keys, extra]
+        return spark.createDataFrame(
+            data, ", ".join(f"{c} STRING" for c in cols)
+        ).selectExpr(*[f"CAST({c} AS {keys.get(c, 'string')}) AS {c}" for c in cols])
+
+    r = rel([("1", "2024-01-01", "2024-01-01 00:00:01", "1.50", "x", "r")], "a")
+    disjoint = rel(
+        [("2", "2024-01-02", "2024-03-09 12:00:00", "2.25", "y", "s")], "c"
+    )
+    want = {**keys, "a": "string", "c": "string"}
+    for s in (disjoint, rel([], "c")):
+        for kw in ({"rel_sizes": [1, s.count()]}, {"num_tasks": 4}):
+            out = wcoj_natural_join([r, s], **kw)
+            assert out.collect() == [], kw
+            got = {f.name: f.dataType.simpleString() for f in out.schema.fields}
+            assert got == want, kw
+
+
+def _physical_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_wcoj_explicit_one_task_keeps_grouped_path(spark):
+    """Only a DERIVED single cell (``rel_sizes`` on a small input) takes
+    the no-exchange ``coalesce(1)`` path; an explicit ``num_tasks=1``
+    keeps the grouped hypercube plan, so a large upstream scan is not
+    forced through one task."""
+    edges = [(i, (i + 1) % 5) for i in range(5)] + [(0, 2), (2, 0)]
+    r = spark.createDataFrame(edges, "a BIGINT, b BIGINT")
+    s = spark.createDataFrame(edges, "b BIGINT, c BIGINT")
+    t = spark.createDataFrame(edges, "c BIGINT, a BIGINT")
+    want = rows(multiway_natural_join([r, s, t], use_ghd=True), ["a", "b", "c"])
+
+    explicit = wcoj_natural_join([r, s, t], num_tasks=1)
+    plan = _physical_plan(explicit)
+    assert "Exchange" in plan and "Coalesce 1" not in plan, plan
+    assert rows(explicit, ["a", "b", "c"]) == want
+
+    derived = wcoj_natural_join([r, s, t], rel_sizes=[len(edges)] * 3)
+    plan = _physical_plan(derived)
+    assert "Exchange" not in plan and "Coalesce 1" in plan, plan
+    assert rows(derived, ["a", "b", "c"]) == want
 
 
 def test_wcoj_graph_triangle_count_matches(sess):
