@@ -28,6 +28,7 @@ from __future__ import annotations
 
 from functools import reduce
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -38,8 +39,12 @@ _LIVE_CACHES: list[DataFrame] = []
 
 
 def _tracked_persist(df: DataFrame) -> DataFrame:
-    _LIVE_CACHES.append(df.persist())
-    return df
+    """Persist `df`, tracking it only when this call made the cache entry:
+    a plan the session already caches (a repeated run) is left to the call
+    that cached it, so repeats add nothing to pin in `_LIVE_CACHES`."""
+    if df.storageLevel == StorageLevel.NONE:
+        _LIVE_CACHES.append(df)
+    return df.persist()
 
 
 def release_caches() -> None:
@@ -70,31 +75,52 @@ def _spread(df: DataFrame) -> DataFrame:
     return df.repartition(target) if nparts < target else df
 
 
+# Hot per-row expressions are built as SQL TEXT: one selectExpr parse per
+# projection instead of a py4j round trip per Column node — a Python lambda
+# inside F.transform alone costs dozens. Integer literals keep their Spark
+# types in SQL text (961748941 parses as INT, 4294967311 as BIGINT).
+
+
+def _tokens_sql(text_col: str) -> str:
+    """SQL text of a document's whitespace-token array, empties dropped.
+    Mirrors DuckDB `list_filter(string_split(text, ' '), x -> x <> '')`."""
+    return f"filter(split(`{text_col}`, ' '), x -> x <> '')"
+
+
+def _features_sql(toks: str, n: int | None) -> str:
+    """SQL text of a document's DISTINCT feature array over the token-array
+    expression `toks`: the tokens themselves (n=None) or word n-gram
+    shingles at 1-indexed positions, mirroring DuckDB's
+    `list_transform(range(1, len(toks)-(n-2)), ...)`. The one feature
+    definition behind `shingles()` and both minhash arms. Guard:
+    sequence(1, size-(n-1)) DESCENDS for docs shorter than n tokens
+    (invalid element_at indices) — such docs have no shingles."""
+    if n is None:
+        return f"array_distinct({toks})"
+    gram = ", ".join(f"element_at({toks}, i + {k})" for k in range(n))
+    return (
+        f"array_distinct(CASE WHEN size({toks}) >= {n} THEN "
+        f"transform(sequence(1, size({toks}) - {n - 1}), i -> concat_ws(' ', {gram})) "
+        "ELSE CAST(array() AS array<string>) END)"
+    )
+
+
 def tokenize_words(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """(id, word) pairs, distinct per doc — whitespace tokens, empties dropped.
     Mirrors DuckDB `unnest(list_distinct(list_filter(string_split(text,' '),
     x -> x <> '')))` exactly."""
-    toks = F.filter(F.split(F.col(text_col), " "), lambda x: x != F.lit(""))
-    return (
-        df.select(F.col(id_col).alias("id"), F.explode(F.array_distinct(toks)).alias("w"))
+    return df.selectExpr(
+        f"`{id_col}` AS id", f"explode({_features_sql(_tokens_sql(text_col), None)}) AS w"
     )
 
 
 def shingles(
     df: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """(id, shingle) pairs: distinct word n-grams. 1-indexed positions to
-    mirror DuckDB's `list_transform(range(1, len(toks)-(n-2)), ...)`."""
-    toks = F.filter(F.split(F.col(text_col), " "), lambda x: x != F.lit(""))
-    df = df.select(F.col(id_col).alias("id"), toks.alias("toks"))
-    gram = F.transform(
-        F.sequence(F.lit(1), F.size("toks") - (n - 1)),
-        lambda i: F.concat_ws(" ", *[F.element_at("toks", i + k) for k in range(n)]),
+    """(id, shingle) pairs: distinct word n-grams (see `_features_sql`)."""
+    return df.selectExpr(f"`{id_col}` AS id", f"{_tokens_sql(text_col)} AS toks").selectExpr(
+        "id", f"explode({_features_sql('toks', n)}) AS s"
     )
-    # guard: sequence(1, size-(n-1)) DESCENDS for docs shorter than n tokens
-    # (invalid element_at indices) — such docs have no shingles
-    gram = F.when(F.size("toks") >= n, gram).otherwise(F.array().cast("array<string>"))
-    return df.select("id", F.explode(F.array_distinct(gram)).alias("s"))
 
 
 def exact_dedup(
@@ -127,11 +153,11 @@ MINHASH_COEFFS: list[tuple[int, int]] = [
     (715_827_883, 186_091_583),
 ]
 
-
-def _perm(a: int, b: int):
-    """One-parameter lambda factory for F.transform (a 2-parameter lambda
-    would receive the element INDEX as its second argument)."""
-    return lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_PRIME)
+# md5 of a string → 32-bit integer from its first 8 hex chars, as SQL text
+# over one argument: conv(_, 16, 10) is one builtin call. The DuckDB oracles
+# (which lack conv()) compute the SAME value via per-digit arithmetic
+# (strpos/substr sums, see queries/pipeline._h32_sql); verified bit-equal.
+_H32_SQL = "CAST(conv(substring(md5({}), 1, 8), 16, 10) AS BIGINT)"
 
 
 def minhash_signatures(
@@ -145,7 +171,7 @@ def minhash_signatures(
     aggregation, vs. exploding seeds through two shuffles."""
     if num_hashes > len(MINHASH_COEFFS):
         raise ValueError(f"num_hashes > {len(MINHASH_COEFFS)} needs more MINHASH_COEFFS")
-    hashes = words.select("id", _hex_to_long(F.md5(F.col("w"))).alias("h32"))
+    hashes = words.select("id", F.expr(_H32_SQL.format("w")).alias("h32"))
     return hashes.groupBy("id").agg(
         *[
             F.min((F.lit(a) * F.col("h32") + F.lit(b)) % F.lit(MINHASH_PRIME)).alias(f"h{j}")
@@ -158,15 +184,15 @@ def lsh_bands(sig: DataFrame, band_size: int = 4) -> DataFrame:
     """(id, band, sig): concat each band's minhashes in seed order — pure
     per-row projection over the wide signature (no extra shuffle)."""
     n = len([c for c in sig.columns if c.startswith("h")])
-    bands = []
-    for b in range(n // band_size):
-        cols = [F.col(f"h{b * band_size + i}") for i in range(band_size)]
-        bands.append(
-            F.struct(F.lit(b).alias("band"), F.concat_ws("|", *cols).alias("sig"))
-        )
-    return sig.select(
-        "id", F.explode(F.array(*bands)).alias("bs")
-    ).select("id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
+    bands = ", ".join(
+        f"struct({b} AS band, concat_ws('|', "
+        + ", ".join(f"h{b * band_size + i}" for i in range(band_size))
+        + ") AS sig)"
+        for b in range(n // band_size)
+    )
+    return sig.selectExpr("id", f"explode(array({bands})) AS bs").selectExpr(
+        "id", "bs.band AS band", "bs.sig AS sig"
+    )
 
 
 DEFAULT_MAX_BUCKET_SIZE = 100_000
@@ -213,22 +239,19 @@ def lsh_buckets(
     why `minhash_near_dups` persists THIS relation rather than the pairs."""
     buckets = (
         bands.groupBy("band", "sig")
-        .agg(F.sort_array(F.collect_set("id")).alias("ids"))
-        .filter(F.size("ids") >= 2)
+        .agg(F.expr("sort_array(collect_set(id))").alias("ids"))
+        .filter("size(ids) >= 2")
     )
     if max_bucket_size is not None:
-        buckets = buckets.filter(F.size("ids") <= max_bucket_size)
+        buckets = buckets.filter(f"size(ids) <= {int(max_bucket_size)}")
     return buckets
 
 
 def _stream_pairs(buckets: DataFrame) -> DataFrame:
     return (
-        buckets.select(F.posexplode("ids").alias("__pos", "id1"), "ids")
+        buckets.selectExpr("posexplode(ids) AS (__pos, id1)", "ids")
         # slice is 1-based: elements strictly after the anchor at __pos
-        .select(
-            "id1",
-            F.explode(F.slice("ids", F.col("__pos") + 2, F.size("ids"))).alias("id2"),
-        )
+        .selectExpr("id1", "explode(slice(ids, __pos + 2, size(ids))) AS id2")
         .distinct()
     )
 
@@ -293,7 +316,7 @@ def minhash_near_dups(
     # corpus-wide shingle-array column by orders of magnitude in memory.
     # Semantically identical to the exploded formulation (same hash family,
     # same min, same jaccard) — the oracle SQL mirrors it step-for-step.
-    toks = F.filter(F.split(F.col(text_col), " "), lambda x: x != F.lit(""))
+    toks = _tokens_sql(text_col)
     # Featureless docs (empty/short text) can't be near-dups; keeping them
     # would collide every one on the empty band signature and 0/0 the
     # jaccard. The exploded oracle excludes them naturally (no rows).
@@ -303,7 +326,7 @@ def minhash_near_dups(
     # single-threaded on the unspread scan partition (measured 8× slowdown
     # at sf0.1) and again after the exchange.
     min_toks = 1 if shingle_n is None else shingle_n
-    src = df.filter(F.size(toks) >= min_toks)
+    src = df.filter(f"size({toks}) >= {min_toks}")
 
     # Features over a MATERIALIZED token column, never the inline split
     # expression (r16): referenced inside the per-position shingle lambda,
@@ -312,40 +335,25 @@ def minhash_near_dups(
     # non-cheap multi-referenced token array is evaluated once per row
     # (CollapseProject keeps it — the same discipline as the hs column
     # below). Both the signature arm and the verify arm go through this.
-    def _feat_expr(tok_col):
-        if shingle_n is None:
-            return F.array_distinct(tok_col)
-        n = shingle_n
-        gram = F.transform(
-            F.sequence(F.lit(1), F.size(tok_col) - (n - 1)),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(tok_col, i + k) for k in range(n)]
-            ),
-        )
-        # descending-sequence guard (redundant after the pre-filter, kept as
-        # defense in depth): < n tokens → no shingles
-        return F.array_distinct(
-            F.when(F.size(tok_col) >= n, gram).otherwise(
-                F.array().cast("array<string>")
-            )
+    # The shingle guard is redundant after the pre-filter, kept as defense
+    # in depth.
+    def _feats(rel: DataFrame) -> DataFrame:
+        return rel.selectExpr(f"`{id_col}` AS id", f"{toks} AS __t").selectExpr(
+            "id", f"{_features_sql('__t', shingle_n)} AS feats"
         )
 
-    base = _spread(src).select(F.col(id_col).alias("id"), toks.alias("__t")).select(
-        "id", _feat_expr(F.col("__t")).alias("feats")
-    )
+    base = _feats(_spread(src))
 
     if num_hashes > len(MINHASH_COEFFS):
         raise ValueError(f"num_hashes > {len(MINHASH_COEFFS)} needs more MINHASH_COEFFS")
     # hs as its own projection: used by all num_hashes signature columns, so
     # CollapseProject keeps it materialized once per row (non-cheap expr
     # referenced >1 time is not inlined) — md5 runs once per feature.
-    hs = base.select(
-        "id", F.transform(F.col("feats"), lambda s: _hex_to_long(F.md5(s))).alias("hs")
-    )
-    sig = hs.select(
+    hs = base.selectExpr("id", f"transform(feats, s -> {_H32_SQL.format('s')}) AS hs")
+    sig = hs.selectExpr(
         "id",
         *[
-            F.array_min(F.transform(F.col("hs"), _perm(a, b))).alias(f"h{j}")
+            f"array_min(transform(hs, h -> ({a} * h + {b}) % {MINHASH_PRIME})) AS h{j}"
             for j, (a, b) in enumerate(MINHASH_COEFFS[:num_hashes])
         ],
     )
@@ -366,24 +374,20 @@ def minhash_near_dups(
     # the parallelizing exchange), then re-derive feats for just those docs.
     # No distinct on cand_ids: left_semi is insensitive to build-side
     # duplicates, so the dedup shuffle would be pure latency.
-    cand_ids = buckets.select(F.explode("ids").alias(id_col))
+    cand_ids = buckets.selectExpr(f"explode(ids) AS `{id_col}`")
     feats_cand = _tracked_persist(
-        src.join(F.broadcast(cand_ids), id_col, "left_semi")
-        .select(F.col(id_col).alias("id"), toks.alias("__t"))
-        .select("id", _feat_expr(F.col("__t")).alias("feats"))
+        _feats(src.join(F.broadcast(cand_ids), id_col, "left_semi"))
     )
     # explicit broadcast hints: both sides are candidate-sized; without the
     # hint AQE must materialize the shuffle first to discover that
-    f1 = F.broadcast(feats_cand.select(F.col("id").alias("id1"), F.col("feats").alias("__f1")))
-    f2 = F.broadcast(feats_cand.select(F.col("id").alias("id2"), F.col("feats").alias("__f2")))
-    inter = F.size(F.array_intersect(F.col("__f1"), F.col("__f2")))
+    f1 = F.broadcast(feats_cand.selectExpr("id AS id1", "feats AS __f1"))
+    f2 = F.broadcast(feats_cand.selectExpr("id AS id2", "feats AS __f2"))
+    inter = "size(array_intersect(__f1, __f2))"
     return (
         pairs.join(f1, "id1")
         .join(f2, "id2")
-        .select(
-            "id1",
-            "id2",
-            (inter / (F.size("__f1") + F.size("__f2") - inter)).alias("jaccard"),
+        .selectExpr(
+            "id1", "id2", f"{inter} / (size(__f1) + size(__f2) - {inter}) AS jaccard"
         )
         .filter(F.col("jaccard") >= threshold)
     )
@@ -422,18 +426,11 @@ def ngram_jaccard_pairs(
 
 # ------------------------------------------------------------------ simhash
 
-def _hex_to_long(hex_col):
-    """First 8 hex chars of an md5 → 32-bit integer. Spark-side: conv(_, 16,
-    10) — one builtin call. The DuckDB oracles (which lack conv()) compute
-    the SAME value via per-digit arithmetic (strpos/substr sums, see
-    queries/pipeline._h32_sql); verified bit-equal."""
-    return F.conv(F.substring(hex_col, 1, 8), 16, 10).cast("long")
-
 
 def simhash(words: DataFrame, bits: int = 32) -> DataFrame:
     """(id, simhash): per-token 32-bit md5-derived hash, per-bit majority vote.
     Integer-only — deterministic and oracle-exact."""
-    h = words.select("id", _hex_to_long(F.md5(F.col("w"))).alias("h32"))
+    h = words.select("id", F.expr(_H32_SQL.format("w")).alias("h32"))
     b = F.explode(F.sequence(F.lit(0), F.lit(bits - 1))).alias("b")
     votes = (
         h.select("id", "h32", b)
@@ -625,8 +622,7 @@ def substring_dup_stats(
     traded for a bounded two-shuffle plan that survives 100 TB."""
     from pyspark.sql import Window
 
-    toks = F.filter(F.split(F.col(text_col), " "), lambda x: x != F.lit(""))
-    d = df.select(F.col(id_col).alias("id"), toks.alias("toks"))
+    d = df.selectExpr(f"`{id_col}` AS id", f"{_tokens_sql(text_col)} AS toks")
     gram = F.transform(
         F.sequence(F.lit(1), F.size("toks") - (n - 1)),
         lambda i: F.md5(F.concat_ws(" ", *[F.element_at("toks", i + k) for k in range(n)])),
@@ -807,10 +803,7 @@ def ppjoin_pairs(
     if not (0 < threshold_num <= threshold_den):
         raise ValueError(f"need 0 < t <= 1, got {threshold_num}/{threshold_den}")
     if shingle_n is None:
-        toks = F.array_distinct(
-            F.filter(F.split(F.col(text_col), " "), lambda x: x != F.lit(""))
-        )
-        words = df.select(F.col(id_col).alias("id"), F.explode(toks).alias("w"))
+        words = tokenize_words(df, id_col, text_col)
     else:
         words = shingles(df, shingle_n, id_col, text_col).withColumnRenamed("s", "w")
     words = words.localCheckpoint(eager=True)
@@ -941,8 +934,7 @@ def c4_segment_dedup(
     self-join because min-over-window IS the dedup decision."""
     from pyspark.sql import Window
 
-    toks = F.filter(F.split(F.col(text_col), " "), lambda x: x != F.lit(""))
-    d = df.select(F.col(id_col).alias("id"), toks.alias("toks"))
+    d = df.selectExpr(f"`{id_col}` AS id", f"{_tokens_sql(text_col)} AS toks")
     nseg = F.ceil(F.size("toks") / F.lit(seg_words)).cast("int")
     segs = F.transform(
         F.sequence(F.lit(0), nseg - 1),

@@ -65,7 +65,7 @@ import re
 import shutil
 from urllib.parse import quote, unquote
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -74,6 +74,9 @@ _DATA = "data"
 DELETE_COL = "__deleted"
 # shuffle key for the single-job partitioned writes; never lands in files
 _PCOL = "__lake_p"
+# the directory name partitionBy gives NULL and '' partition values,
+# which _write_partitioned records as the partition name
+_HIVE_DEFAULT = "__HIVE_DEFAULT_PARTITION__"
 
 
 def _manifest_path(table_dir: str, version: int) -> str:
@@ -1892,14 +1895,23 @@ def merge_cow(
     if _partition_source_col(pcol) not in updates.columns:
         raise ValueError(f"updates must carry the partition column {pcol!r}")
     _check_schema_compatible(m, updates, "merge_cow")
-    # the batch feeds the distinct-collect, the anti-join, and the write —
-    # materialize it once instead of re-executing its upstream plan 3 times
-    updates = updates.persist()
+    # the batch feeds the anti-join and the write — materialize it once,
+    # and learn the touched partitions as a side effect of that one job
+    # (an Observation on the checkpoint: no distinct shuffle, no second
+    # job). NULL and '' are mapped to the name partitionBy gives them,
+    # which also keeps collect_set from dropping the NULL partition. The
+    # checkpoint lives in executor storage: a lost executor fails the
+    # write below, before any manifest is published.
     utc = _transform_utc(m)
-    touched = set(
-        str(r[0])
-        for r in updates.select(_partition_expr(pcol, updates, utc)).distinct().collect()
-    )
+    obs = Observation()
+    pexpr = _partition_expr(pcol, updates, utc)
+    updates = updates.observe(
+        obs,
+        F.collect_set(
+            F.coalesce(F.nullif(pexpr, F.lit("")), F.lit(_HIVE_DEFAULT))
+        ).alias("touched"),
+    ).localCheckpoint(eager=True)
+    touched = set(obs.get["touched"])
     # ALL live files per partition: append_commit creates multi-file
     # partitions, and keeping only one entry per partition silently dropped
     # every earlier file's rows from the merge AND from carried manifests
@@ -1943,7 +1955,6 @@ def merge_cow(
     files = carried_files + _write_partitioned(
         merged, table_dir, pcol, version, files_per_partition, utc=utc
     )
-    updates.unpersist()
 
     # deletes keep applying to carried files; rewritten files had them
     # applied during the base read above. merge_keys is recorded so

@@ -92,56 +92,56 @@ from seccosql_spark.queries import lakehouse_q  # noqa: E402,F401
 # every session; overdue-beats-hot guarantees the rotation keeps closing.
 # ---------------------------------------------------------------------------
 _PRIORITY_WINDOW = [
-    "events_interval_overlaps",
-    "window_topk_per_user",
-    "cube_agg",
-    "curation_end_to_end",
-    "timeseries_gapfill_hourly",
-    "w5_cycle_join",
-    "w6_theta_chain",
-    "sketch_quantile_mergeable",
-    "stats_corr_by_source",
-    "text_bm25_topk",
-    "text_bpe_merges",
-    "text_cooccurrence_pmi",
-    "text_gopher_filter",
-    "text_length_percentile_band",
-    "text_redact_pii",
-    "text_repetition_stats",
-    "text_unigram_logprob",
-    "text_winnowing_fingerprint",
-    "aggregate_global",
-    "aggregate_group_having",
-    "ann_ivf_pq",
-    "approx_quantiles_sketch",
-    "events_cusum_changepoint",
-    "events_decayed_engagement",
-    "events_json_extract",
-    "ivm_join_delta",
-    "orders_monthly_trend",
-    "pkfk_star_planned",
-    "skew_salted_join",
-    "table_checksum_buckets",
-    "text_bpe_encode",
-    "text_bpe_tokens",
-    "text_bpe_vocab_coverage",
-    "text_chunk_windows",
-    "text_fingerprint",
-    "text_lang_guess",
-    "text_length_histogram",
-    "text_tfidf_top3",
-    "text_token_stats",
-    "text_vocab_top20",
-    "udf_pandas_vector_norm",
-    "update_rows",
-    "ann_index_persisted",
-    "ann_matryoshka_prefix",
-    "cdc_merge_apply",
-    "embed_centroid_margin",
-    "events_ks_drift_test",
-    "events_winsorized_mean",
-    "fk_orphan_audit",
-    "multimodal_audio_fingerprint",
+    "corpus_clean_pass",
+    "decontaminate_bloom",
+    "decontaminate_ngram8",
+    "dedup_cluster_canonical",
+    "dedup_containment",
+    "dedup_exact",
+    "dedup_incremental_batch",
+    "dedup_minhash_lsh",
+    "dedup_minhash_words",
+    "dedup_ngram_jaccard",
+    "dedup_simhash",
+    "dedup_substring_windows",
+    "lakehouse_append_compact",
+    "lakehouse_merge_cow",
+    "lakehouse_schema_evolution",
+    "lakehouse_time_travel",
+    "stream_lakehouse_ingest",
+    "stream_window_counts",
+    "basket_part_pairs",
+    "curation_multisignal",
+    "dedup_c4_segments",
+    "funnel_view_click_purchase",
+    "g_clustering_coeff",
+    "g_common_neighbors",
+    "g_connected_components",
+    "g_degrees",
+    "g_kcore",
+    "g_ktruss",
+    "g_label_propagation",
+    "g_pagerank_3rounds",
+    "g_path2_pairs",
+    "g_scc",
+    "g_sssp_weighted",
+    "lakehouse_change_feed",
+    "lakehouse_equality_deletes",
+    "lakehouse_expire_versions",
+    "lakehouse_file_skipping",
+    "lakehouse_hidden_partitioning",
+    "lakehouse_incremental_sync",
+    "lakehouse_merge_evolution",
+    "lakehouse_sorted_compaction",
+    "lakehouse_sql_time_travel",
+    "rollup_agg",
+    "stream_change_feed_apply",
+    "multimodal_phash_dedup",
+    "orders_bucketed_join",
+    "orders_partition_pruned",
+    "sample_bootstrap_ci",
+    "shard_rendezvous_stability",
+    "sketch_distinct_kmv",
 ]
 
 

@@ -88,6 +88,57 @@ def test_same_key_upsert_and_delete_in_one_batch(spark, table):
     ]
 
 
+@pytest.mark.parametrize("pval", [None, ""])
+def test_merge_into_null_and_empty_partition(spark, tmp_path, pval):
+    """An upsert whose partition value is NULL or '' rewrites the partition
+    the write put such rows in (partitionBy's default partition), so the
+    old row is replaced, not kept beside the new one, and the audit counts
+    every partition once."""
+    d = str(tmp_path / "t")
+    create_table(
+        spark.createDataFrame(
+            [(1, "a", 10.0), (2, pval, 20.0), (3, "b", 30.0)],
+            "k BIGINT, p STRING, v DOUBLE",
+        ),
+        d,
+        "p",
+    )
+    upd = spark.createDataFrame([(2, pval, 99.0)], "k BIGINT, p STRING, v DOUBLE")
+    m = merge_cow(spark, d, upd, ["k"])
+    assert m["partitions_rewritten"] == 1 and m["partitions_carried"] == 2
+    got = rows(read_table(spark, d).select("k", "v"))
+    assert got == [(1, 10.0), (2, 99.0), (3, 30.0)]
+
+
+def test_merge_cow_runs_one_job_before_its_write(spark, table, monkeypatch):
+    """The batch is materialized by one job, which also yields the touched
+    partitions (an Observation on the checkpoint): no distinct-collect job
+    and no shuffle run before the partitioned write."""
+    from seccosql_spark.operators import lakehouse
+
+    sc = spark.sparkContext
+    group = "merge-cow-before-write"
+    seen = []
+    write = lakehouse._write_partitioned
+
+    def counting_write(*args, **kwargs):
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        seen.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        return write(*args, **kwargs)
+
+    monkeypatch.setattr(lakehouse, "_write_partitioned", counting_write)
+    upd = spark.createDataFrame(
+        [(2, "a", 99.0), (9, "c", 90.0)], "k BIGINT, p STRING, v DOUBLE"
+    )
+    sc.setJobGroup(group, "merge_cow jobs before the write", interruptOnCancel=False)
+    try:
+        m = merge_cow(spark, table, upd, ["k"])
+    finally:
+        sc.setJobGroup(None, None)
+    assert seen == [1]
+    assert m["partitions_rewritten"] == 2 and m["partitions_carried"] == 1
+
+
 def test_snapshot_reads_start_no_spark_job(spark, table):
     """Building a read of a table with a recorded schema reads the files
     with that schema: no schema-inference job runs before an action."""

@@ -148,6 +148,51 @@ def test_minhash_signature_building_blocks(spark):
     assert [(r["id1"], r["id2"], r["jaccard"]) for r in j] == [(1, 2, 1.0)]
 
 
+def test_minhash_build_round_trips_bounded(spark):
+    """Building the MinHash-LSH plan is driver-side work with no Spark job;
+    its hot expressions are SQL text, so the build stays a few hundred
+    py4j round trips (the Column-API build with Python lambdas inside
+    F.transform took about 2,070 on the same input)."""
+    import os
+
+    import pytest
+
+    from tests.conftest import SF_DIR, py4j_round_trips
+
+    path = os.path.join(os.path.dirname(SF_DIR), "sf0.01", "documents.parquet")
+    if not os.path.exists(path):
+        pytest.skip(f"no sf0.01 documents at {path}")
+    docs = spark.read.parquet(path)
+    minhash_near_dups(docs, threshold=0.5, shingle_n=3)  # warm py4j caches
+    with py4j_round_trips() as n:
+        minhash_near_dups(docs, threshold=0.5, shingle_n=3)
+    assert 0 < n[0] <= 600, n[0]
+
+
+def test_minhash_repeat_runs_track_each_cache_once(spark):
+    """A repeated run persists plans the session already caches: only the
+    run that made each cache entry tracks it, so `_LIVE_CACHES` holds the
+    pipeline's two caches however often it runs, and `release_caches`
+    frees both."""
+    from pyspark import StorageLevel
+
+    from seccosql_spark.operators import dedup
+
+    dedup.release_caches()
+    docs = spark.createDataFrame(
+        [(1, "cache tracking probe one two three"),
+         (2, "cache tracking probe one two four")],
+        "doc_id INT, text STRING",
+    )
+    for _ in range(2):
+        minhash_near_dups(docs, threshold=0.5, shingle_n=3).collect()
+    tracked = list(dedup._LIVE_CACHES)
+    assert len(tracked) == 2
+    dedup.release_caches()
+    assert dedup._LIVE_CACHES == []
+    assert all(df.storageLevel == StorageLevel.NONE for df in tracked)
+
+
 def test_analyze_table_populates_stats(sess):
     stats = sess.analyze_table("region", columns=["r_name"])
     assert stats.row_count == 5
