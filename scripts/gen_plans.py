@@ -13,6 +13,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 
+from bench import SF_DIR
+from perfbench.spans import drain_listener, job_counters
 from seccosql_spark.registry import REGISTRY, run
 
 EXTRA = [
@@ -89,34 +91,31 @@ reference, so pipelines that cache small intermediates (e.g.
 dedup_minhash_lsh's candidate pairs, referenced three times) overcount
 their RUNTIME exchanges — the cached subplan executes once. The
 `runtime:` line is the measured truth: the query is EXECUTED and its
-job/stage counts read from the status tracker (stages - jobs ≈ shuffle
-boundaries actually paid, since each job's first stage reads the source or
-a cache). When text and runtime disagree, trust runtime.
+job/stage counts read from the status store. `stages` counts executed
+stages only: a stage skipped because an earlier job already wrote its
+shuffle is not counted (stages - jobs ≈ shuffle boundaries actually paid,
+since each job's first stage reads the source or a cache). When text and
+runtime disagree, trust runtime.
 """
 
 
 def _run_measured(spark, name: str):
     """Build AND execute the query under one job group, returning (df,
-    jobs, stages) actually run — the profiled counterpart to the text
-    exchange count. Construction happens INSIDE the group: queries like
-    ann_ivf_kmeans run driver-side collects while building, and excluding
-    those would under-report exactly the construction-heavy plans."""
+    jobs, executed stages) from the benchmark's job counters. Construction
+    happens INSIDE the group: queries like ann_ivf_kmeans run driver-side
+    collects while building, and excluding those would under-report exactly
+    the construction-heavy plans."""
     sc = spark.sparkContext
     group = f"plans_{name}"
     sc.setJobGroup(group, name, interruptOnCancel=False)
     try:
-        df = run(name, spark, "/root/testdata/sf0.1")
+        df = run(name, spark, SF_DIR)
         df.count()
     finally:
         sc.setJobGroup(None, None)
-    tracker = sc.statusTracker()
-    job_ids = tracker.getJobIdsForGroup(group)
-    stages = set()
-    for j in job_ids:
-        info = tracker.getJobInfo(j)
-        if info is not None:
-            stages.update(info.stageIds)
-    return df, len(job_ids), len(stages)
+    drain_listener(sc)
+    c = job_counters(sc, [group])[group]
+    return df, c["jobs"], c["stages"]
 
 
 def main() -> None:

@@ -81,6 +81,18 @@ def ts_reads_as_long(path: str) -> bool:
     return lt.type != "TIMESTAMP" or json.loads(lt.to_json())["timeUnit"] == "nanoseconds"
 
 
+def _events_stream(reader, probe_path: str) -> DataFrame:
+    """``reader(ts_type)`` -> the readStream DataFrame, declared with the
+    ``ts`` type the parquet footer at ``probe_path`` calls for; a
+    nanos-as-long generation is normalized to TIMESTAMP. Integer ``div``,
+    NOT float division: ns values past 2^53 lose exact integer
+    representation as doubles, shifting ~1.6% of timestamps by 1us vs the
+    batch path's epoch_us (which documents this contract)."""
+    if ts_reads_as_long(probe_path):
+        return reader(T.LongType()).withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return reader(T.TimestampType())
+
+
 def stream_events(spark: SparkSession, path: str) -> DataFrame:
     """File-source stream over parquet events (one file = one micro-batch
     unit; in production this is Kafka/files — same downstream plan).
@@ -94,13 +106,9 @@ def stream_events(spark: SparkSession, path: str) -> DataFrame:
     timezone the instants are identical), and a NANOS/long generation is
     declared LONG then normalized to TIMESTAMP — so watermarks and windows
     work identically for either generation."""
-    if ts_reads_as_long(path):  # nanos-as-long generation
-        stream = spark.readStream.schema(events_schema(T.LongType())).parquet(path)
-        # integer `div`, NOT float division: ns values past 2^53 lose exact
-        # integer representation as doubles, shifting ~1.6% of timestamps by
-        # 1us vs the batch path's epoch_us (which documents this contract)
-        return stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return spark.readStream.schema(events_schema(T.TimestampType())).parquet(path)
+    return _events_stream(
+        lambda t: spark.readStream.schema(events_schema(t)).parquet(path), path
+    )
 
 
 def stream_events_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -108,17 +116,12 @@ def stream_events_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream source requires a DIRECTORY basePath, so the single
     `events.parquet` is selected with pathGlobFilter. Same encoding probe
     and NANOS normalization as `stream_events`."""
-    reader = lambda t: (  # noqa: E731 — two-line branch, not worth a def
-        spark.readStream.schema(events_schema(t))
+    return _events_stream(
+        lambda t: spark.readStream.schema(events_schema(t))
         .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
+        .parquet(sf_dir),
+        f"{sf_dir}/events.parquet",
     )
-    if ts_reads_as_long(f"{sf_dir}/events.parquet"):
-        # integer `div` for exactness past 2^53 — see stream_events
-        return reader(T.LongType()).withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-    return reader(T.TimestampType())
 
 
 def windowed_agg(
@@ -210,8 +213,7 @@ def stream_upsert_state(events: DataFrame, watermark: str = "2 hours") -> DataFr
 # that count from the bounded input's bytes — clamped to the session's
 # configured value so a large input keeps full parallelism — cut the
 # headline stream_window_counts drain ~2x at sf0.1 (32 stores -> 1 for a
-# 2 MB input; measured interleaved A/B 1.5-1.76s vs 0.73-0.9s). Target
-# bytes/partition is conf-overridable for deployments. 8 MB default —
+# 2 MB input; measured interleaved A/B 1.5-1.76s vs 0.73-0.9s). 8 MB target —
 # windowed-aggregation state is much denser per input byte than a plain
 # shuffle, so the target must ramp partitions up sooner than a batch
 # 64-128 MB rule: measured at sf1 (9.4 MB input) the drain runs 2.25s
@@ -219,7 +221,6 @@ def stream_upsert_state(events: DataFrame, watermark: str = "2 hours") -> DataFr
 # 2 MB (5 stores) — and at sf0.1 (2 MB) both 8 and 64 MB give the same
 # single-store 2x win.
 _STREAM_BYTES_PER_PARTITION = 8 * 1024 * 1024
-_STREAM_BYTES_KEY = "spark.seccosql.streaming.bytesPerPartition"
 
 
 def _local_bytes(path: str) -> int | None:
@@ -258,11 +259,7 @@ def scaled_stream_partitions(spark: SparkSession, *paths: str):
         saved_n = int(saved)
     except (TypeError, ValueError):
         return lambda: None
-    try:
-        target = int(spark.conf.get(_STREAM_BYTES_KEY, ""))
-    except (TypeError, ValueError):
-        target = _STREAM_BYTES_PER_PARTITION
-    parts = max(1, min(saved_n, -(-sum(sizes) // target)))
+    parts = max(1, min(saved_n, -(-sum(sizes) // _STREAM_BYTES_PER_PARTITION)))
     spark.conf.set("spark.sql.shuffle.partitions", str(parts))
 
     def restore() -> None:
@@ -347,15 +344,12 @@ def finalized_sessions(
     return sessions.where(cond | (F.col(guard_col) < F.lit(0)))
 
 
-def stream_stream_join(
-    left: DataFrame,
-    right: DataFrame,
-    interval_seconds: int = 3600,
-    watermark: str = "2 hours",
+def _interval_join(
+    left: DataFrame, right: DataFrame, interval_seconds: int, watermark: str, how: str
 ) -> DataFrame:
-    """Stream-stream inner join: right events within `interval_seconds`
-    AFTER the left event, same user. Both sides watermarked so the join
-    state is bounded (Spark evicts rows once they can no longer match)."""
+    """Same user, right event within `interval_seconds` AFTER the left one;
+    both sides watermarked so the join state is bounded (Spark evicts rows
+    once they can no longer match)."""
     l = left.withWatermark("ts", watermark).select(
         F.col("event_id").alias("l_id"),
         F.col("ts").alias("l_ts"),
@@ -371,7 +365,19 @@ def stream_stream_join(
         (F.col("l_user") == F.col("r_user"))
         & (F.col("r_ts") > F.col("l_ts"))
         & (F.col("r_ts") <= F.col("l_ts") + F.expr(f"INTERVAL {interval_seconds} SECONDS")),
+        how,
     ).select("l_id", "r_id", "l_user")
+
+
+def stream_stream_join(
+    left: DataFrame,
+    right: DataFrame,
+    interval_seconds: int = 3600,
+    watermark: str = "2 hours",
+) -> DataFrame:
+    """Stream-stream inner join: right events within `interval_seconds`
+    AFTER the left event, same user (``_interval_join``)."""
+    return _interval_join(left, right, interval_seconds, watermark, "inner")
 
 
 def stream_stream_left_join(
@@ -387,23 +393,7 @@ def stream_stream_left_join(
     discipline, not the pairing: unmatched rows inside the final watermark
     margin stay in state and are never emitted by a bounded drain — the
     oracle must replay that cutoff (queries/streaming_q.py)."""
-    l = left.withWatermark("ts", watermark).select(
-        F.col("event_id").alias("l_id"),
-        F.col("ts").alias("l_ts"),
-        F.col("user_id").alias("l_user"),
-    )
-    r = right.withWatermark("ts", watermark).select(
-        F.col("event_id").alias("r_id"),
-        F.col("ts").alias("r_ts"),
-        F.col("user_id").alias("r_user"),
-    )
-    return l.join(
-        r,
-        (F.col("l_user") == F.col("r_user"))
-        & (F.col("r_ts") > F.col("l_ts"))
-        & (F.col("r_ts") <= F.col("l_ts") + F.expr(f"INTERVAL {interval_seconds} SECONDS")),
-        "left_outer",
-    ).select("l_id", "r_id", "l_user")
+    return _interval_join(left, right, interval_seconds, watermark, "left_outer")
 
 
 def stream_static_enrich(events: DataFrame, dim: DataFrame, key: str = "user_id") -> DataFrame:

@@ -3,6 +3,7 @@ mirroring the reference's iterator-level suites (SURVEY.md §5)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from seccosql_spark.operators.dedup import exact_dedup, minhash_near_dups
@@ -624,21 +625,50 @@ def test_scc_directed_vs_undirected(spark):
     assert cc[5] == cc[1] == cc[2] == cc[6]
 
 
-def test_scc_coloring_matches_closure_random(spark):
-    """Differential: the scalable trim+coloring+backward-reach kernel must
-    agree with the exact closure kernel on a random sparse digraph (cycles,
-    chains, DAG parts all arise at this density)."""
+def _scc_random_pairs():
     import random
 
+    rng = random.Random(20260814)
+    pairs = sorted({(rng.randrange(50), rng.randrange(50)) for _ in range(130)})
+    return [(a, b) for a, b in pairs if a != b]
+
+
+def _scc_chain_pairs():
+    # three nontrivial SCCs chained (condensation depth 3); each cycle's
+    # head holds its largest id, so min-id labels never come from the head
+    out = []
+    for grp in ([100, 1, 2], [50, 51, 52], [90, 10, 11]):
+        out += [(grp[i], grp[(i + 1) % len(grp)]) for i in range(len(grp))]
+    return out + [(1, 50), (51, 10)]
+
+
+_SCC_GRAPHS = {
+    "random": _scc_random_pairs(),
+    # two cycles joined one way, plus a tail out of the second
+    "two_cycles_tail": [(i, (i + 1) % 10) for i in range(10)]
+    + [(20 + i, 20 + (i + 1) % 8) for i in range(8)]
+    + [(3, 21), (27, 40), (40, 41)],
+    "forward_chain": [(i, i + 1) for i in range(30)],  # all singletons, ids rise
+    "reverse_chain": [(i + 1, i) for i in range(30)],  # ids fall
+    # (1, 1) is kept on purpose: a self-loop is its own singleton SCC
+    "self_loops": [(1, 1), (2, 3), (3, 2), (4, 5)],
+    "scc_chain_adversarial_ids": _scc_chain_pairs(),
+}
+
+
+@pytest.mark.parametrize("graph", list(_SCC_GRAPHS))
+def test_scc_coloring_matches_closure_random(spark, graph):
+    """Differential: the scalable trim+coloring+backward-reach kernel must
+    agree with the exact closure kernel on a random sparse digraph (cycles,
+    chains, DAG parts all arise at this density) and on hand-built shapes:
+    cycles with a tail, forward and reverse chains, self-loops, and a chain
+    of SCCs whose ids defeat min-label propagation."""
     from seccosql_spark.graph.algorithms import (
         strongly_connected_components,
         strongly_connected_components_closure,
     )
 
-    rng = random.Random(20260814)
-    pairs = sorted({(rng.randrange(50), rng.randrange(50)) for _ in range(130)})
-    pairs = [(a, b) for a, b in pairs if a != b]
-    edges = spark.createDataFrame(pairs, "src BIGINT, dst BIGINT")
+    edges = spark.createDataFrame(_SCC_GRAPHS[graph], "src BIGINT, dst BIGINT")
     got = {
         (r["id"], r["scc"])
         for r in strongly_connected_components(edges, local_finish_edges=0).collect()

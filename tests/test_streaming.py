@@ -450,10 +450,11 @@ def test_checkpoint_resume_processes_only_new_files(sess, tmp_path):
     assert sorted(seen) == list(range(15))  # f0 NOT reprocessed
 
 
-def test_scaled_stream_partitions_sizing_and_restore(spark, events_dir):
+def test_scaled_stream_partitions_sizing_and_restore(spark, events_dir, monkeypatch):
     """r16: a bounded drain's shuffle/state partition count is derived from
     the input's bytes (ceil(bytes/target) clamped to the session value) and
     restored afterwards; unknowable inputs are a no-op."""
+    from seccosql_spark.streaming import ops
     from seccosql_spark.streaming.ops import _local_bytes, scaled_stream_partitions
 
     saved = spark.conf.get("spark.sql.shuffle.partitions")
@@ -466,13 +467,10 @@ def test_scaled_stream_partitions_sizing_and_restore(spark, events_dir):
     assert spark.conf.get("spark.sql.shuffle.partitions") == saved
     # a tiny bytes-per-partition target ramps the count but never exceeds
     # the session's configured value
-    spark.conf.set("spark.seccosql.streaming.bytesPerPartition", "1")
-    try:
-        restore = scaled_stream_partitions(spark, events_dir)
-        assert spark.conf.get("spark.sql.shuffle.partitions") == saved
-        restore()
-    finally:
-        spark.conf.unset("spark.seccosql.streaming.bytesPerPartition")
+    monkeypatch.setattr(ops, "_STREAM_BYTES_PER_PARTITION", 1)
+    restore = scaled_stream_partitions(spark, events_dir)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == saved
+    restore()
     # non-local URI -> no-op
     restore = scaled_stream_partitions(spark, "s3://bucket/path")
     assert spark.conf.get("spark.sql.shuffle.partitions") == saved
