@@ -9,16 +9,16 @@ Each ``--arm`` is one set of session confs; ``UNSET`` unsets a key. With
 no ``--arm`` there is one default arm (a profile). Per query, every arm
 first collects its sorted rows, and the tool exits non-zero if they differ.
 Then one warmup per arm and ``reps`` rounds, the arm order reversed every
-round so that host contention lands on every arm alike. Each timed
-``run(...).count()`` runs in its own job group, counted by the benchmark's
-``perfbench.spans.job_counters``: jobs, executed stages, executor CPU,
+round so that host contention lands on every arm alike. A run sees every
+key its arm does not set at the key's entry value. Each timed
+``run(...).count()`` runs in its own job group, unique to the call, counted
+by ``perfbench.spans.job_counters``: jobs, executed stages, executor CPU,
 shuffle and spill bytes, which host contention cannot move. Every conf an
 arm set is restored or unset at exit. Cross-commit claims use the
 perfbench A/B recipe, not this tool.
 
-A streaming drain's micro-batch jobs run under the stream's own job group
-and are not counted: ``stream_window_counts`` reads only the 2 jobs of the
-count over its memory sink.
+A streaming drain's micro-batch jobs run in the stream's own job group and
+are not counted (``stream_window_counts`` reads only its sink count's 2 jobs).
 """
 
 from __future__ import annotations
@@ -28,6 +28,7 @@ import os
 import statistics
 import sys
 import time
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -60,44 +61,44 @@ def check_equal(name: str, rows: dict[str, list]) -> None:
                              f"({len(first[1])} rows) and [{tag}] ({len(got)} rows)")
 
 
-def _timed(spark, name: str, sf_dir: str, arm: dict, group: str) -> float:
-    sc = spark.sparkContext
-    _apply(spark, arm)
-    sc.setJobGroup(group, name, interruptOnCancel=False)
+def _timed(spark, name: str, sf_dir: str, conf: dict, group: str) -> float:
+    _apply(spark, conf)
+    spark.sparkContext.setJobGroup(group, name, interruptOnCancel=False)
     try:
         t0 = time.perf_counter()
         run(name, spark, sf_dir).count()
         return time.perf_counter() - t0
     finally:
-        sc.setJobGroup(None, None)
+        spark.sparkContext.setJobGroup(None, None)
         spark.catalog.clearCache()
 
 
 def compare(spark, sf_dir: str, names, arms, reps: int) -> dict:
     """{query: {arm label: record}}; a record holds the timed walls, their
     median and quartiles, and the median of each of ``COUNTERS``."""
-    arms = arms or [{}]
     saved = {k: spark.conf.get(k, None) for arm in arms for k in arm}
+    conf = {label(a): {**saved, **a} for a in arms or [{}]}
+    call = uuid.uuid4().hex[:8]
     out = {}
     try:
         for name in names:
             rows = {}
-            for arm in arms:
-                _apply(spark, arm)
-                rows[label(arm)] = sorted(map(tuple, run(name, spark, sf_dir).collect()), key=repr)
+            for tag, c in conf.items():
+                _apply(spark, c)
+                rows[tag] = sorted(map(tuple, run(name, spark, sf_dir).collect()), key=repr)
                 spark.catalog.clearCache()
             check_equal(name, rows)
-            for arm in arms:
-                _timed(spark, name, sf_dir, arm, f"ab-warmup-{name}")
-            walls = {label(a): [] for a in arms}
+            for c in conf.values():
+                _timed(spark, name, sf_dir, c, f"ab-{call}-warmup-{name}")
+            walls = {tag: [] for tag in conf}
             for rep in range(reps):
-                for arm in arms if rep % 2 == 0 else arms[::-1]:
-                    walls[label(arm)].append(
-                        _timed(spark, name, sf_dir, arm, f"ab-{name}-{label(arm)}-{rep}"))
+                for tag in list(conf)[::-1 if rep % 2 else 1]:
+                    walls[tag].append(
+                        _timed(spark, name, sf_dir, conf[tag], f"ab-{call}-{name}-{tag}-{rep}"))
             drain_listener(spark.sparkContext)
             out[name] = {}
             for tag, ws in walls.items():
-                groups = [f"ab-{name}-{tag}-{rep}" for rep in range(reps)]
+                groups = [f"ab-{call}-{name}-{tag}-{rep}" for rep in range(reps)]
                 per = job_counters(spark.sparkContext, groups).values()
                 q1, _, q3 = statistics.quantiles(ws, n=4) if len(ws) > 1 else ws * 3
                 out[name][tag] = {

@@ -22,12 +22,23 @@ def ab():
     return mod
 
 
-def test_compare_reports_counters_per_arm_and_restores_conf(spark, ab):
+def test_compare_reports_counters_per_arm_and_restores_conf(spark, ab, monkeypatch):
     key = "spark.sql.adaptive.enabled"
     before = spark.conf.get(key)
+    assert before == "true"
+    seen, real_run = [], ab.run
+
+    def recording_run(name, session, sf_dir):
+        seen.append(session.conf.get(key))
+        return real_run(name, session, sf_dir)
+
+    monkeypatch.setattr(ab, "run", recording_run)
     arms = [{}, {key: "false"}]
     res = ab.compare(spark, SF_DIR, ["q1_pricing_summary"], arms, reps=1)
     assert spark.conf.get(key) == before
+    # rows, warmup, one timed rep: every run of the default arm sees the
+    # entry value, not the conf the other arm left behind
+    assert seen == [before, "false"] * 3
     per_arm = res["q1_pricing_summary"]
     assert list(per_arm) == ["default", f"{key}=false"]
     for rec in per_arm.values():
@@ -37,6 +48,9 @@ def test_compare_reports_counters_per_arm_and_restores_conf(spark, ab):
         assert rec["rows"] > 0 and len(rec["wall_s"]) == 1
         assert rec["jobs"] >= 1
         assert rec["shuffle_write_bytes"] > 0
+    # a second call counts only its own jobs
+    again = ab.compare(spark, SF_DIR, ["q1_pricing_summary"], [{}], reps=1)
+    assert again["q1_pricing_summary"]["default"]["jobs"] == per_arm["default"]["jobs"]
 
 
 def test_arms_with_different_rows_fail(ab):
