@@ -34,6 +34,7 @@ JIT-warmup artifacts as engine time):
 
 from __future__ import annotations
 
+import contextlib
 import datetime as _dt
 import json
 import os
@@ -289,6 +290,32 @@ def _cpu_canary(nproc: int) -> dict:
         "nproc": nproc,
         "nproc_wall_sec": round(wall, 3),
     }
+
+
+@contextlib.contextmanager
+def py4j_round_trips():
+    """Count the driver's py4j round trips inside the block: every command
+    PySpark sends the JVM over its (pinned-thread) client-server gateway,
+    except py4j's reference releases. py4j sends a release whenever Python
+    frees a JVM object handle, so how many land inside the block depends on
+    when earlier objects die, not on the code in it (the same warm build
+    read 63 and 125 round trips with them). Yields a one-element list
+    holding the running count."""
+    from py4j.clientserver import ClientServerConnection
+
+    count = [0]
+    send = ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        if not command.startswith("m\n"):
+            count[0] += 1
+        return send(self, command, *args, **kwargs)
+
+    ClientServerConnection.send_command = counting
+    try:
+        yield count
+    finally:
+        ClientServerConnection.send_command = send
 
 
 def measure_runs(

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from seccosql_spark.graph.pattern import EdgePat, node_constraints, parse_pattern
+from seccosql_spark.sqltext import quote_ident
 
 if TYPE_CHECKING:
     from seccosql_spark.session import SeccoSession
@@ -179,48 +180,33 @@ class SeccoGraphFrame:
         k-edge pattern does not recompute the edge plan k times)."""
         if df is None:
             df = self.edges
+        # label/property values are user-supplied: F.lit keeps their type
+        # exact, where SQL text would re-type them (0.5 parses as DECIMAL)
         if e.label is not None and self.label_col in df.columns:
             df = df.filter(F.col(self.label_col) == e.label)
         for k, v in e.props.items():
             df = df.filter(F.col(k) == F.lit(v))
+        # the projections are SQL text, one selectExpr each: a Column node
+        # costs ~5 py4j round trips (seccosql_spark/sqltext.py)
+        src, dst = quote_ident(self.src_col), quote_ident(self.dst_col)
+        props = [
+            f"{quote_ident(c)} AS {quote_ident(f'{e.var}_{c}')}"
+            for c in df.columns
+            if e.var and c not in (self.src_col, self.dst_col)
+        ]
         if e.src.var == e.dst.var:
             # self-loop pattern (a)-[]->(a): filter src==dst on the raw edge
             # df (both column names still distinct here), then alias ONCE —
             # aliasing both endpoints to the same name makes every later
             # reference ambiguous. Grammar parity: parsing/SQLParser.scala
             # :144-219 allows repeating a node variable.
-            loop = df.filter(F.col(self.src_col) == F.col(self.dst_col))
-            return loop.select(
-                F.col(self.src_col).alias(e.src.var),
-                *(
-                    F.col(c).alias(f"{e.var}_{c}")
-                    for c in df.columns
-                    if e.var and c not in (self.src_col, self.dst_col)
-                ),
-            )
-        fwd = df.select(
-            F.col(self.src_col).alias(e.src.var),
-            F.col(self.dst_col).alias(e.dst.var),
-            *(
-                F.col(c).alias(f"{e.var}_{c}")
-                for c in df.columns
-                if e.var and c not in (self.src_col, self.dst_col)
-            ),
-        )
+            loop = df.filter(f"{src} = {dst}")
+            return loop.selectExpr(f"{src} AS {quote_ident(e.src.var)}", *props)
+        a, b = quote_ident(e.src.var), quote_ident(e.dst.var)
+        fwd = df.selectExpr(f"{src} AS {a}", f"{dst} AS {b}", *props)
         if e.directed:
-            out = fwd
-        else:
-            rev = df.select(
-                F.col(self.dst_col).alias(e.src.var),
-                F.col(self.src_col).alias(e.dst.var),
-                *(
-                    F.col(c).alias(f"{e.var}_{c}")
-                    for c in df.columns
-                    if e.var and c not in (self.src_col, self.dst_col)
-                ),
-            )
-            out = fwd.unionByName(rev)
-        return out
+            return fwd
+        return fwd.unionByName(df.selectExpr(f"{dst} AS {a}", f"{src} AS {b}", *props))
 
     def pattern(self, text: str, distinct_nodes: bool = False, algorithm: str = "ghd"):
         """Match a Cypher-ish pattern; returns a SeccoDataFrame with one column

@@ -32,6 +32,8 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from seccosql_spark.sqltext import quote_ident
+
 # DataFrames persisted by pipelines in this module, so long-lived sessions
 # can reclaim storage memory between invocations (a round-2 review found the
 # minhash feature cache leaking across repeated runs).
@@ -84,7 +86,7 @@ def _spread(df: DataFrame) -> DataFrame:
 def _tokens_sql(text_col: str) -> str:
     """SQL text of a document's whitespace-token array, empties dropped.
     Mirrors DuckDB `list_filter(string_split(text, ' '), x -> x <> '')`."""
-    return f"filter(split(`{text_col}`, ' '), x -> x <> '')"
+    return f"filter(split({quote_ident(text_col)}, ' '), x -> x <> '')"
 
 
 def _features_sql(toks: str, n: int | None) -> str:
@@ -110,7 +112,7 @@ def tokenize_words(df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     Mirrors DuckDB `unnest(list_distinct(list_filter(string_split(text,' '),
     x -> x <> '')))` exactly."""
     return df.selectExpr(
-        f"`{id_col}` AS id", f"explode({_features_sql(_tokens_sql(text_col), None)}) AS w"
+        f"{quote_ident(id_col)} AS id", f"explode({_features_sql(_tokens_sql(text_col), None)}) AS w"
     )
 
 
@@ -118,7 +120,7 @@ def shingles(
     df: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """(id, shingle) pairs: distinct word n-grams (see `_features_sql`)."""
-    return df.selectExpr(f"`{id_col}` AS id", f"{_tokens_sql(text_col)} AS toks").selectExpr(
+    return df.selectExpr(f"{quote_ident(id_col)} AS id", f"{_tokens_sql(text_col)} AS toks").selectExpr(
         "id", f"explode({_features_sql('toks', n)}) AS s"
     )
 
@@ -338,7 +340,7 @@ def minhash_near_dups(
     # The shingle guard is redundant after the pre-filter, kept as defense
     # in depth.
     def _feats(rel: DataFrame) -> DataFrame:
-        return rel.selectExpr(f"`{id_col}` AS id", f"{toks} AS __t").selectExpr(
+        return rel.selectExpr(f"{quote_ident(id_col)} AS id", f"{toks} AS __t").selectExpr(
             "id", f"{_features_sql('__t', shingle_n)} AS feats"
         )
 
@@ -374,7 +376,7 @@ def minhash_near_dups(
     # the parallelizing exchange), then re-derive feats for just those docs.
     # No distinct on cand_ids: left_semi is insensitive to build-side
     # duplicates, so the dedup shuffle would be pure latency.
-    cand_ids = buckets.selectExpr(f"explode(ids) AS `{id_col}`")
+    cand_ids = buckets.selectExpr(f"explode(ids) AS {quote_ident(id_col)}")
     feats_cand = _tracked_persist(
         _feats(src.join(F.broadcast(cand_ids), id_col, "left_semi"))
     )
@@ -622,7 +624,7 @@ def substring_dup_stats(
     traded for a bounded two-shuffle plan that survives 100 TB."""
     from pyspark.sql import Window
 
-    d = df.selectExpr(f"`{id_col}` AS id", f"{_tokens_sql(text_col)} AS toks")
+    d = df.selectExpr(f"{quote_ident(id_col)} AS id", f"{_tokens_sql(text_col)} AS toks")
     gram = F.transform(
         F.sequence(F.lit(1), F.size("toks") - (n - 1)),
         lambda i: F.md5(F.concat_ws(" ", *[F.element_at("toks", i + k) for k in range(n)])),
@@ -934,7 +936,7 @@ def c4_segment_dedup(
     self-join because min-over-window IS the dedup decision."""
     from pyspark.sql import Window
 
-    d = df.selectExpr(f"`{id_col}` AS id", f"{_tokens_sql(text_col)} AS toks")
+    d = df.selectExpr(f"{quote_ident(id_col)} AS id", f"{_tokens_sql(text_col)} AS toks")
     nseg = F.ceil(F.size("toks") / F.lit(seg_words)).cast("int")
     segs = F.transform(
         F.sequence(F.lit(0), nseg - 1),

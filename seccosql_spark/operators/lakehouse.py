@@ -69,6 +69,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from seccosql_spark.sqltext import quote_ident
+
 _MANIFESTS = "_manifests"
 _DATA = "data"
 DELETE_COL = "__deleted"
@@ -1051,7 +1053,7 @@ def _partitions_matching(spark: SparkSession, m: dict, where: str) -> set[str]:
     int-valued partitions."""
     col = _partition_source_col(m["partition_by"])
     parts = sorted({f["partition"] for f in m["files"]})
-    pdf = spark.createDataFrame([(p,) for p in parts], f"`{col}` STRING")
+    pdf = spark.createDataFrame([(p,) for p in parts], f"{quote_ident(col)} STRING")
     try:
         return {r[0] for r in pdf.where(where).collect()}
     except Exception as exc:
@@ -1420,7 +1422,7 @@ def add_column(table_dir: str, name: str, ddl_type: str) -> dict:
     if name.lower() in {f.name.lower() for f in st.fields}:
         raise ValueError(f"column {name!r} already exists")
     try:
-        new_field = StructType.fromDDL(f"`{name}` {ddl_type}").fields[0]
+        new_field = StructType.fromDDL(f"{quote_ident(name)} {ddl_type}").fields[0]
     except Exception as exc:
         raise ValueError(
             f"add_column: {ddl_type!r} is not a parseable DDL type"

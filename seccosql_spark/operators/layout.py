@@ -22,6 +22,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from seccosql_spark.sqltext import quote_ident
+
 
 def zvalue(cols: Sequence[Column], bits: int = 16) -> Column:
     """Morton z-value: interleave the low `bits` bits of the given
@@ -122,7 +124,7 @@ def _normalized_dims(df: DataFrame, cols: Sequence[str], bits: int) -> list[Colu
         span = max(1, mx - mn)
         dims.append(
             F.expr(
-                f"CAST(((CAST(`{c}` AS DECIMAL(38,0)) - {mn}) * {(1 << bits) - 1})"
+                f"CAST(((CAST({quote_ident(c)} AS DECIMAL(38,0)) - {mn}) * {(1 << bits) - 1})"
                 f" DIV {span} AS BIGINT)"
             )
         )

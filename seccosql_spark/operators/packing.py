@@ -30,6 +30,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from seccosql_spark.sqltext import quote_ident
+
 # Metadata rows per range partition when deriving the pack fan-out from the
 # observed input size (~24-byte (ids, weight) rows → ~24 MB per partition).
 _PACK_ROWS_PER_PARTITION = 1_000_000
@@ -165,10 +167,11 @@ def pack_sequences_greedy(
         raise ValueError(f"need capacity/part_size >= 1, got {capacity}/{part_size}")
     import pandas as pd
 
-    base = df.select(
-        F.col(id_col).cast("long").alias("id"),
-        F.expr(f"CAST(`{weight_col}` AS INT)").alias("w"),
-        F.expr(f"CAST(`{id_col}` AS BIGINT) DIV {part_size}").alias("part"),
+    key = quote_ident(id_col)
+    base = df.selectExpr(
+        f"CAST({key} AS BIGINT) AS id",
+        f"CAST({quote_ident(weight_col)} AS INT) AS w",
+        f"CAST({key} AS BIGINT) DIV {part_size} AS part",
     )
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from seccosql_spark.catalog import SideCatalog, TableMeta
+from seccosql_spark.sqltext import quote_ident
 
 # Proven-small thresholds for an explicit broadcast hint. Row limit assumes
 # ~100 B/row (dimension tables), i.e. ~100 MB broadcast — safely inside a
@@ -129,15 +130,17 @@ def plan_star_join(catalog: SideCatalog, inputs: list[JoinInput]) -> DataFrame:
             0,
         )
         nxt = remaining.pop(nxt_idx)
+        # each condition is SQL text, parsed once by the join: a Column
+        # node costs ~5 py4j round trips (seccosql_spark/sqltext.py)
         conds = []
         for my_col, other_name, other_col in nxt.joins:
             if other_name in joined:
-                conds.append(F.col(my_col) == F.col(other_col))
+                conds.append(f"{quote_ident(my_col)} = {quote_ident(other_col)}")
         for j in inputs:
             if j.name in joined:
                 for my_col, other_name, other_col in j.joins:
                     if other_name == nxt.name:
-                        conds.append(F.col(my_col) == F.col(other_col))
+                        conds.append(f"{quote_ident(my_col)} = {quote_ident(other_col)}")
         if not conds:
             # A relation with no equi-join edge into the joined set would
             # silently become a cartesian product — at scale that's a
@@ -148,12 +151,9 @@ def plan_star_join(catalog: SideCatalog, inputs: list[JoinInput]) -> DataFrame:
                 f"input {nxt.name!r} has no join condition connecting it to "
                 f"{sorted(joined)} — refusing to emit an implicit cross join"
             )
-        cond = conds[0]
-        for c in conds[1:]:
-            cond = cond & c
         right = nxt.df
         if is_dimension(nxt) and _proven_small(catalog.get(nxt.name)):
             right = F.broadcast(right)
-        out = out.join(right, cond)
+        out = out.join(right, F.expr(" AND ".join(conds)))
         joined.add(nxt.name)
     return out

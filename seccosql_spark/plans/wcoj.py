@@ -39,8 +39,9 @@ import itertools
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from seccosql_spark.sqltext import quote_ident
 
 # Types the hypercube hash + Arrow transport + Python-level equality all
 # handle exactly. Binary/array/map/struct join keys are rejected up front
@@ -270,7 +271,20 @@ def wcoj_natural_join(
     union, rel_cols, order, field_type, shares = hypercube_union(
         dfs, num_tasks, rel_sizes
     )
-    out_schema = T.StructType([T.StructField(a, field_type[a]) for a in order])
+    # PySpark's pandas APIs resolve every input column with df[name], which
+    # fails on a name holding a dot or a backtick: such attributes cross the
+    # Arrow boundary under a positional name and get theirs back at the end
+    names = [a if "." not in a and "`" not in a else f"__a{k}" for k, a in enumerate(order)]
+    if names != order:
+        union = union.toDF("__cell", "__rel", *names)
+        inner = dict(zip(order, names))
+        rel_cols = [[inner[c] for c in cols] for cols in rel_cols]
+    out_schema = T.StructType(
+        [T.StructField(n, field_type[a]) for n, a in zip(names, order)]
+    )
+
+    def _named(out: DataFrame) -> DataFrame:
+        return out if names == order else out.toDF(*order)
 
     def _cell_rels(cell: pd.DataFrame):
         rels = []
@@ -303,21 +317,21 @@ def wcoj_natural_join(
                 return
             cell = pd.concat(pdfs, ignore_index=True)
             rels = _cell_rels(cell)
-            yield _leapfrog(rels, order) if rels is not None else pd.DataFrame(
-                columns=order
+            yield _leapfrog(rels, names) if rels is not None else pd.DataFrame(
+                columns=names
             )
 
-        return union.coalesce(1).mapInPandas(one_cell, out_schema)
+        return _named(union.coalesce(1).mapInPandas(one_cell, out_schema))
 
     def join_cell(key: tuple, cell: pd.DataFrame) -> pd.DataFrame:
         # applyInPandas delivers the WHOLE cell (mapInPandas batches could
         # split one, silently dropping matches)
         rels = _cell_rels(cell)
         if rels is None:
-            return pd.DataFrame(columns=order)
-        return _leapfrog(rels, order)
+            return pd.DataFrame(columns=names)
+        return _leapfrog(rels, names)
 
-    return union.groupBy("__cell").applyInPandas(join_cell, out_schema)
+    return _named(union.groupBy("__cell").applyInPandas(join_cell, out_schema))
 
 
 def hypercube_union(
@@ -379,13 +393,19 @@ def hypercube_union(
 
     # one shuffle: each row → its coordinate cells (replicated over the
     # shares of missing attributes), tagged with its relation index; every
-    # attribute is a native typed column (null where the relation lacks it)
+    # attribute is a native typed column (null where the relation lacks it).
+    # Built as SQL text: one selectExpr per projection instead of ~5 py4j
+    # round trips per Column node (seccosql_spark/sqltext.py). Cell terms
+    # are summed in the global `order`, so the plan text is the same in
+    # every process (a set's iteration order follows PYTHONHASHSEED).
+    q = {a: quote_ident(a) for a in order}
     pieces = []
-    for i, df in enumerate(dfs):
-        cols = set(df.columns)
-        own = F.lit(0)
-        for a in cols:
-            own = own + F.pmod(F.xxhash64(F.col(a)), F.lit(shares[a])) * F.lit(strides[a])
+    for i, cols in enumerate(attr_sets):
+        own = "0" + "".join(
+            f" + pmod(xxhash64({q[a]}), {shares[a]}) * {strides[a]}"
+            for a in order
+            if a in cols
+        )
         missing = [a for a in order if a not in cols]
         combos = list(
             itertools.product(*[range(shares[a]) for a in missing])
@@ -398,21 +418,21 @@ def hypercube_union(
         # explode — a Generate node per piece that only ever emitted one
         # row per input row (r17)
         off = (
-            F.lit(offsets[0])
+            str(offsets[0])
             if len(offsets) == 1
-            else F.explode(F.array(*[F.lit(o) for o in offsets]))
+            else f"explode(array({', '.join(map(str, offsets))}))"
         )
-        piece = df.select(
-            own.alias("__own"),
-            off.alias("__off"),
-            F.lit(i).alias("__rel"),
+        piece = dfs[i].selectExpr(
+            f"{own} AS __own",
+            f"{off} AS __off",
+            f"{i} AS __rel",
             *[
-                (F.col(a) if a in cols else F.lit(None).cast(field_type[a])).alias(a)
+                f"{q[a]} AS {q[a]}"
+                if a in cols
+                else f"CAST(NULL AS {field_type[a].simpleString()}) AS {q[a]}"
                 for a in order
             ],
-        ).select(
-            (F.col("__own") + F.col("__off")).alias("__cell"), "__rel", *order
-        )
+        ).selectExpr("__own + __off AS __cell", "__rel", *q.values())
         pieces.append(piece)
     union = pieces[0]
     for p in pieces[1:]:

@@ -402,17 +402,17 @@ def g_triangle_wcoj(sess: SeccoSession):
     obs = Observation()
     e = (
         sess.spark.sql(EDGES_SPARSE)
-        .observe(obs, F.count(F.lit(1)).alias("__m"))
+        .observe(obs, F.expr("count(1) AS __m"))
         .localCheckpoint(eager=True)
     )
     # edge count rides the checkpoint job as an Observation (r17: one job
     # saved per run vs a separate .count() — the pack_by_budget pattern)
     m = int(obs.get["__m"] or 0)
-    r = e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    s = e.select(F.col("src").alias("b"), F.col("dst").alias("c"))
-    t = e.select(F.col("src").alias("c"), F.col("dst").alias("a"))
+    r = e.selectExpr("src AS a", "dst AS b")
+    s = e.selectExpr("src AS b", "dst AS c")
+    t = e.selectExpr("src AS c", "dst AS a")
     joined = wcoj_natural_join([r, s, t], rel_sizes=[m, m, m])
-    return sess.from_spark(joined.agg(F.count(F.lit(1)).alias("n")))
+    return sess.from_spark(joined.agg(F.expr("count(1) AS n")))
 
 
 # Routing thresholds replayed by the g_skew_hub_auto_wcoj oracle; the row

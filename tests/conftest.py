@@ -5,7 +5,6 @@ scala:6-55), with DuckDB as the trusted engine."""
 
 from __future__ import annotations
 
-import contextlib
 import math
 import os
 
@@ -13,6 +12,7 @@ import duckdb
 import pytest
 from pyspark.sql import SparkSession
 
+from bench import py4j_round_trips  # noqa: F401  (tests import it from here)
 from seccosql_spark.session import TESTDATA_TABLES, SeccoSession
 
 SF_DIR = os.environ.get("SECCO_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -33,27 +33,6 @@ def spark() -> SparkSession:
     )
     spark.sparkContext.setLogLevel("ERROR")
     yield spark
-
-
-@contextlib.contextmanager
-def py4j_round_trips():
-    """Count the driver's py4j round trips inside the block: every command
-    PySpark sends the JVM over its (pinned-thread) client-server gateway.
-    Yields a one-element list holding the running count."""
-    from py4j.clientserver import ClientServerConnection
-
-    count = [0]
-    send = ClientServerConnection.send_command
-
-    def counting(self, command, *args, **kwargs):
-        count[0] += 1
-        return send(self, command, *args, **kwargs)
-
-    ClientServerConnection.send_command = counting
-    try:
-        yield count
-    finally:
-        ClientServerConnection.send_command = send
 
 
 @pytest.fixture(scope="session")

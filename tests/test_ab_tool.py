@@ -1,6 +1,7 @@
 """scripts/ab.py, the A/B-and-profile tool: it runs on the test session,
-reports wall time and the benchmark's job counters per arm, leaves the
-session's conf as it found it, and refuses arms whose rows differ."""
+reports wall time, the benchmark's job counters and the build's cost per
+arm, leaves the session's conf as it found it, and refuses arms whose rows
+differ."""
 
 from __future__ import annotations
 
@@ -43,11 +44,14 @@ def test_compare_reports_counters_per_arm_and_restores_conf(spark, ab, monkeypat
     assert list(per_arm) == ["default", f"{key}=false"]
     for rec in per_arm.values():
         assert set(rec) == {
-            "rows", "wall_s", "wall_median", "wall_q1", "wall_q3", *ab.COUNTERS
+            "rows", "wall_s", "wall_median", "wall_q1", "wall_q3", *ab.COUNTERS, *ab.BUILD
         }
         assert rec["rows"] > 0 and len(rec["wall_s"]) == 1
         assert rec["jobs"] >= 1
         assert rec["shuffle_write_bytes"] > 0
+        # the build census: a SQL query's build is driver-side work only
+        assert rec["build_round_trips"] > 0 and rec["build_jobs"] == 0
+        assert 0 < rec["build_s"] < rec["wall_median"]
     # a second call counts only its own jobs
     again = ab.compare(spark, SF_DIR, ["q1_pricing_summary"], [{}], reps=1)
     assert again["q1_pricing_summary"]["default"]["jobs"] == per_arm["default"]["jobs"]

@@ -111,6 +111,29 @@ def test_minhash_identical_docs_are_found(spark):
     assert pairs == {(1, 2)}
 
 
+@pytest.mark.parametrize("id_col", ["a b", "x.y", "q`r"])
+def test_minhash_quotes_id_col(spark, id_col):
+    """The minhash plan is SQL text that names the id column through
+    ``quote_ident``: an id column named with a space, a dot or a backtick
+    gives the same pairs as one named ``id``."""
+    docs = spark.createDataFrame(
+        [
+            (1, "a b c d e f g h"),
+            (2, "a b c d e f g h"),
+            (3, "z y x w v u t s"),
+            (4, "a b c d e f g z"),
+        ],
+        "id INT, text STRING",
+    )
+
+    def pairs(df, col):
+        return sorted(map(tuple, minhash_near_dups(df, threshold=0.5, id_col=col).collect()))
+
+    want = pairs(docs, "id")
+    assert [p[:2] for p in want] == [(1, 2), (1, 4), (2, 4)]
+    assert pairs(docs.toDF(id_col, "text"), id_col) == want
+
+
 def test_minhash_degenerate_docs_no_crash(spark):
     """Docs shorter than the shingle width / empty text: no shingles, no
     spurious pairs, no divide-by-zero (empty band signatures excluded)."""

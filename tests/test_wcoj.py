@@ -117,6 +117,28 @@ def test_wcoj_explicit_one_task_keeps_grouped_path(spark):
     assert rows(derived, ["a", "b", "c"]) == want
 
 
+def test_wcoj_quotes_attribute_names(spark):
+    """The hypercube is built as SQL text, so every attribute name goes
+    through ``quote_ident``: names holding a space, a dot or a backtick
+    join like plain ones, on the hypercube path and on the derived
+    single-cell path alike."""
+    from seccosql_spark.sqltext import quote_ident
+
+    assert quote_ident("q`r") == "`q``r`"
+    a, b, c = "a b", "x.y", "q`r"
+    edges = [(i, (i + 1) % 5) for i in range(5)] + [(0, 2), (2, 0), (1, 3)]
+    r = spark.createDataFrame(edges, "a BIGINT, b BIGINT").toDF(a, b)
+    s = spark.createDataFrame(edges, "b BIGINT, c BIGINT").toDF(b, c)
+    t = spark.createDataFrame(edges, "c BIGINT, a BIGINT").toDF(c, a)
+    chain = multiway_natural_join([r, s, t], use_ghd=True)
+    want = sorted(map(tuple, chain.collect()))
+    assert len(want) == 3
+    for kw in ({"num_tasks": 8}, {"rel_sizes": [len(edges)] * 3}):
+        out = wcoj_natural_join([r, s, t], **kw)
+        assert out.columns == chain.columns, kw
+        assert sorted(map(tuple, out.collect())) == want, kw
+
+
 def test_wcoj_graph_triangle_count_matches(sess):
     """Real-data check: triangle count on the sparse lineitem graph equals
     the GHD-chain pattern count."""
