@@ -113,6 +113,7 @@ _PRIORITY_WINDOW = [
     "basket_part_pairs",
     "curation_multisignal",
     "dedup_c4_segments",
+    "events_zorder_topk",
     "funnel_view_click_purchase",
     "g_clustering_coeff",
     "g_common_neighbors",
@@ -141,7 +142,6 @@ _PRIORITY_WINDOW = [
     "orders_partition_pruned",
     "sample_bootstrap_ci",
     "shard_rendezvous_stability",
-    "sketch_distinct_kmv",
 ]
 
 
