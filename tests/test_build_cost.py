@@ -55,7 +55,7 @@ def test_warm_build_round_trips_under_ceiling(spark, name):
 def test_file_skipping_warm_build_runs_no_job(spark):
     """The range-clustered table and its max key live in one build-once
     artifact, so a warm ``lakehouse_file_skipping`` build starts no Spark
-    job (it used to recompute ``max(o_orderkey)`` every time: 2 jobs)."""
+    job."""
     run("lakehouse_file_skipping", spark, SF_DIR)
     _, jobs = _build_jobs(spark, lambda: run("lakehouse_file_skipping", spark, SF_DIR))
     assert jobs == 0
