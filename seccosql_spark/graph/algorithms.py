@@ -15,7 +15,7 @@ import threading
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from seccosql_spark.operators.recursion import iterate
+from seccosql_spark.operators.recursion import checkpoint, iterate
 
 
 def _nodes(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -24,6 +24,13 @@ def _nodes(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
         .unionByName(edges.select(F.col(dst).alias("id")))
         .distinct()
     )
+
+
+def _union_all(parts: list[DataFrame]) -> DataFrame:
+    out = parts[0]
+    for part in parts[1:]:
+        out = out.unionByName(part)
+    return out
 
 
 def degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -79,13 +86,11 @@ def pagerank(
     # guide §2.4/§5): both are consumed in EVERY superstep (edges in the
     # contribution join, out_deg twice — shares + dangling), and an
     # unmaterialized plan re-derives the caller's edge pipeline per use.
-    e = edges.select(src, dst).localCheckpoint(eager=True)
-    nodes = _nodes(e, src, dst).localCheckpoint(eager=True)
-    n_nodes = nodes.count()
-    out_deg = (
-        e.groupBy(F.col(src).alias("id"))
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .localCheckpoint(eager=True)
+    e, _ = checkpoint(edges.select(src, dst))
+    nodes, got = checkpoint(_nodes(e, src, dst))
+    n_nodes = got["__n"]
+    out_deg, _ = checkpoint(
+        e.groupBy(F.col(src).alias("id")).agg(F.count(F.lit(1)).alias("deg"))
     )
     # (1-d)/n at fixed point; Python bigints keep it exact at plan time.
     base_fp = (damping_den - damping_num) * scale // (damping_den * n_nodes)
@@ -131,17 +136,22 @@ def connected_components_star(
     which is the difference between ~5 and ~50 shuffle rounds on a long
     duplicate-chain graph at corpus scale. Each round is two
     groupBy-min + join passes over a shrinking edge set; all BIGINT, so
-    results are deterministic and identical to connected_components()."""
-    e = (
+    results are deterministic and identical to connected_components().
+
+    One job per round: the round's edge count rides its checkpoint, and the
+    exact set-equality probe runs only when that count equals the previous
+    round's. The node set comes from the unfiltered edges, so a node whose
+    only edge is a self-loop is its own component."""
+    pairs, got = checkpoint(
         edges.select(F.col(src).cast("long").alias("x"), F.col(dst).cast("long").alias("y"))
-        .filter(F.col("x") != F.col("y"))
-        .select(F.least("x", "y").alias("lo"), F.greatest("x", "y").alias("hi"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .selectExpr("least(x, y) AS lo", "greatest(x, y) AS hi")
+        .distinct(),
+        F.expr("count_if(lo <> hi) AS __e"),
     )
+    e, n_e = pairs.filter("lo <> hi"), got["__e"]
     all_nodes = (
-        e.select(F.col("lo").alias("id")).unionByName(e.select(F.col("hi").alias("id"))).distinct()
-    ).localCheckpoint(eager=True)
+        pairs.select(F.col("lo").alias("id")).unionByName(pairs.select(F.col("hi").alias("id")))
+    ).distinct()
 
     def _sym(pairs: DataFrame) -> DataFrame:
         return pairs.select(F.col("lo").alias("u"), F.col("hi").alias("v")).unionByName(
@@ -163,21 +173,20 @@ def connected_components_star(
         # min({v ∈ N(u): v <= u} ∪ {u})
         small_nb = sym2.filter(F.col("v") < F.col("u"))
         smins = small_nb.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
+        small, got = checkpoint(
             small_nb.join(smins, "u")
             .select(F.col("v").alias("x"), F.col("m").alias("y"))
             .unionByName(smins.select(F.col("u").alias("x"), F.col("m").alias("y")))
             .filter(F.col("x") != F.col("y"))
             .select(F.least("x", "y").alias("lo"), F.greatest("x", "y").alias("hi"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
         # fixpoint: the edge relation stopped changing (both are distinct sets,
         # so equal counts + empty difference is an exact check)
-        if small.count() == e.count() and small.exceptAll(e).isEmpty():
-            e = small
+        done = got["__n"] == n_e and small.exceptAll(e).isEmpty()
+        e, n_e = small, got["__n"]
+        if done:
             break
-        e = small
     # at fixpoint every edge is (component-min, member)
     comp = e.select(F.col("hi").alias("id"), F.col("lo").alias("component"))
     return all_nodes.join(comp, "id", "left").select(
@@ -206,20 +215,20 @@ def kcore(
     (typically << max_rounds). Integer-only — deterministic."""
     if max_rounds < 1:
         raise ValueError(f"kcore needs max_rounds >= 1, got {max_rounds}")
-    nb = _sym_neighbors(edges, src, dst).localCheckpoint(eager=True)
-    alive = nb.select(F.col("a").alias("id")).distinct().localCheckpoint(eager=True)
+    nb, _ = checkpoint(_sym_neighbors(edges, src, dst))
+    alive, got = checkpoint(nb.select(F.col("a").alias("id")).distinct())
     for _ in range(max_rounds):
+        n_prev = got["__n"]
         deg = (
             nb.join(alive.select(F.col("id").alias("a")), "a")
             .join(alive.select(F.col("id").alias("b")), "b")
             .groupBy(F.col("a").alias("id"))
             .agg(F.count(F.lit(1)).alias("degree"))
         )
-        survivors = deg.filter(F.col("degree") >= k).localCheckpoint(eager=True)
-        n_prev, n_now = alive.count(), survivors.count()
-        alive = survivors.select("id").localCheckpoint(eager=True)
-        if n_now == n_prev or n_now == 0:
+        survivors, got = checkpoint(deg.filter(F.col("degree") >= k))
+        if got["__n"] in (n_prev, 0):
             return survivors
+        alive = survivors.select("id")
     return survivors
 
 
@@ -246,38 +255,29 @@ def ktruss(
     two surviving partner edges of each. Per-round cost is proportional to
     the removed edges' triangle counts, not the graph's; a triangle whose
     edges die in the same round is distinct-ed so it decrements once. State
-    is the shrinking (a, b, support) set, checkpointed each round; r16: the
-    round's peel count rides that SAME checkpoint as an ``Observation``
-    metric (the SCC kernel's job-economy discipline), so a peel round costs
-    exactly one action — the old separate ``removed.count()`` job is gone —
-    and shuffle partitions are re-derived from the observed remainder size
-    per round (scale-adaptive, clamped to the session's configured value).
+    is the shrinking (a, b, support) set, checkpointed each round; the
+    round's peel count rides that SAME checkpoint (``recursion.checkpoint``),
+    so a peel round costs exactly one action, and shuffle partitions are
+    re-derived from the observed remainder size per round (scale-adaptive,
+    clamped to the session's configured value).
     Raises on budget exhaustion instead of returning a non-truss.
 
     If ``stats`` is a list, appends one dict per peel round with
     ``n_removed`` (delta edges) and ``n_destroyed`` (triangles enumerated
     that round) — the scale-shape evidence that rounds after the first do
-    delta-sized work. Costs one extra count job per round; leave None in
-    production."""
+    delta-sized work. Costs two extra checkpoint jobs per round; leave None
+    in production."""
     if k < 3:
         raise ValueError(f"ktruss needs k >= 3, got {k}")
     if max_rounds < 1:
         raise ValueError(f"ktruss needs max_rounds >= 1, got {max_rounds}")
-    from pyspark.sql import Observation
-
     spark = edges.sparkSession
     _pf_release, _tune_parts = _enter_parallelism_first_off(spark)
 
     def _ckpt_peel(df: DataFrame):
         """Checkpoint the (a, b, support) state with the NEXT round's peel
         count riding the same action — one job per round."""
-        obs = Observation()
-        out = df.observe(
-            obs,
-            F.count(F.lit(1)).alias("__n"),
-            F.sum((F.col("support") < k - 2).cast("long")).alias("__peel"),
-        ).localCheckpoint(eager=True)
-        got = obs.get
+        out, got = checkpoint(df, F.expr(f"count_if(support < {k - 2}) AS __peel"))
         return out, got["__n"], got["__peel"] or 0
 
     def _edge_roles(tri: DataFrame) -> DataFrame:
@@ -289,14 +289,13 @@ def ktruss(
         )
 
     try:
-        e = (
+        e, _ = checkpoint(
             edges.select(
                 F.least(F.col(src), F.col(dst)).alias("a"),
                 F.greatest(F.col(src), F.col(dst)).alias("b"),
             )
             .filter(F.col("a") != F.col("b"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
 
         # one-time full enumeration: initial per-edge supports (0 for edges
@@ -319,7 +318,7 @@ def ktruss(
             n_removed = n_peel
             keep = state.filter(F.col("support") >= k - 2)
             if stats is not None:
-                removed = removed.localCheckpoint(eager=True)
+                removed, _ = checkpoint(removed)
             # triangles (in the PRE-removal graph) containing >= 1 removed
             # edge: join the delta into each of the three edge roles;
             # distinct so a triangle losing 2-3 edges at once is destroyed
@@ -336,8 +335,8 @@ def ktruss(
                 .distinct()
             )
             if stats is not None:
-                destroyed = destroyed.localCheckpoint(eager=True)
-                stats.append({"n_removed": n_removed, "n_destroyed": destroyed.count()})
+                destroyed, got = checkpoint(destroyed)
+                stats.append({"n_removed": n_removed, "n_destroyed": got["__n"]})
             dec = (
                 _edge_roles(destroyed)
                 .join(removed, ["a", "b"], "left_anti")  # dying edges need no update
@@ -371,34 +370,32 @@ def sssp(
     """(id, dist) single-source shortest paths over positive integer edge
     weights: synchronous Bellman-Ford, stopping as soon as a relaxation round
     improves nothing. Distances are BIGINTs — exact, engine-independent. Each
-    round is one join on src + one min-aggregation on dst (two shuffles)."""
-    edges = weighted_edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst"), F.col(weight).cast("long").alias("w")
-    ).localCheckpoint(eager=True)
-    state = edges.sparkSession.sql(
-        f"SELECT CAST({source} AS BIGINT) AS id, CAST(0 AS BIGINT) AS dist"
-    ).localCheckpoint(eager=True)
+    round is one join on src + one min-aggregation on dst (two shuffles) and
+    one job: the merged state carries each node's previous distance, and the
+    count of improved nodes is observed on its checkpoint."""
+    edges, _ = checkpoint(
+        weighted_edges.select(
+            F.col(src).alias("src"), F.col(dst).alias("dst"), F.col(weight).cast("long").alias("w")
+        )
+    )
+    state, _ = checkpoint(
+        edges.sparkSession.sql(f"SELECT CAST({source} AS BIGINT) AS id, CAST(0 AS BIGINT) AS dist")
+    )
     for _ in range(max_rounds):
         relaxed = (
             state.join(edges, state["id"] == edges["src"])
             .select(F.col("dst").alias("id"), (F.col("dist") + F.col("w")).alias("dist"))
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
+            .selectExpr("id", "dist", "CAST(NULL AS BIGINT) AS old")
         )
-        merged = (
-            state.select("id", "dist")
+        merged, got = checkpoint(
+            state.selectExpr("id", "dist", "dist AS old")
             .unionByName(relaxed)
             .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
+            .agg(F.expr("min(dist) AS dist"), F.expr("min(old) AS old")),
+            F.expr("count_if(old IS NULL OR dist < old) AS __imp"),
         )
-        improved = (
-            merged.join(state.withColumnRenamed("dist", "old"), "id", "left")
-            .filter(F.col("old").isNull() | (F.col("dist") < F.col("old")))
-            .count()
-        )
-        state = merged
-        if improved == 0:
+        state = merged.select("id", "dist")
+        if got["__imp"] == 0:
             break
     return state
 
@@ -412,24 +409,21 @@ def label_propagation(
     so unlike textbook async LPA the result is deterministic and
     differentially testable. Fixed round count (community detection has no
     natural fixpoint: labels can oscillate)."""
-    nb = _sym_neighbors(edges, src, dst).localCheckpoint(eager=True)
-    state = nb.select(F.col("a").alias("id")).distinct().select(
-        "id", F.col("id").alias("label")
-    ).localCheckpoint(eager=True)
-    for _ in range(rounds):
-        counted = (
+    nb, _ = checkpoint(_sym_neighbors(edges, src, dst))
+    win = Window.partitionBy("id").orderBy(F.col("c").desc(), F.col("label").asc())
+
+    def step(state: DataFrame) -> DataFrame:
+        return (
             nb.join(state.select(F.col("id").alias("b"), "label"), "b")
             .groupBy(F.col("a").alias("id"), "label")
             .agg(F.count(F.lit(1)).alias("c"))
-        )
-        win = Window.partitionBy("id").orderBy(F.col("c").desc(), F.col("label").asc())
-        state = (
-            counted.withColumn("rn", F.row_number().over(win))
+            .withColumn("rn", F.row_number().over(win))
             .filter(F.col("rn") == 1)
             .select("id", "label")
-            .localCheckpoint(eager=True)
         )
-    return state
+
+    init = nb.select(F.col("a").alias("id")).distinct().select("id", F.col("id").alias("label"))
+    return iterate(init, step, rounds)
 
 
 def clustering_coefficient(
@@ -440,7 +434,7 @@ def clustering_coefficient(
     exact BIGINTs — the coefficient is their ratio, left to the caller so the
     differential gate never compares floats. Plan: the neighbor-pair join is
     bounded by triangle count (each neighbor pair probes one hash lookup)."""
-    nb = _sym_neighbors(edges, src, dst).localCheckpoint(eager=True)
+    nb, _ = checkpoint(_sym_neighbors(edges, src, dst))
     deg = nb.groupBy(F.col("a").alias("id")).agg(F.count(F.lit(1)).alias("deg"))
     pair = (
         nb.select(F.col("a").alias("v"), F.col("b").alias("n1"))
@@ -503,17 +497,15 @@ def connected_components(
     # near-dup clustering rows that was the full shingle/signature/band/verify
     # chain once per propagation round. O(2|E|) rows of 2 pruned columns, the
     # same bound connected_components_star already materializes.
-    sym = (
+    sym, _ = checkpoint(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .localCheckpoint(eager=True)
     )
     # node set = distinct sources of the symmetric view (both orientations
     # are present, so this is src ∪ dst without another upstream derivation)
-    state = sym.select(F.col("a").alias("id")).distinct().select(
-        "id", F.col("id").alias("component")
+    state, _ = checkpoint(
+        sym.select(F.col("a").alias("id")).distinct().select("id", F.col("id").alias("component"))
     )
-    state = state.localCheckpoint(eager=True)
     for _ in range(max_rounds):
         candidates = (
             sym.join(state.select(F.col("id").alias("a"), "component"), "a")
@@ -521,9 +513,8 @@ def connected_components(
             .groupBy("id")
             .agg(F.min("component").alias("new_component"))
         )
-        # checkpoint FIRST, then count + project from the materialized rows
-        # (count-then-checkpoint ran the join+agg twice per round)
-        improved = (
+        # one job per round: the changed-label count rides the checkpoint
+        improved, got = checkpoint(
             state.join(candidates, "id", "left")
             .select(
                 "id",
@@ -531,9 +522,10 @@ def connected_components(
                     "next"
                 ),
                 "component",
-            )
-        ).localCheckpoint(eager=True)
-        n_changed = improved.filter(F.col("next") < F.col("component")).count()
+            ),
+            F.expr("count_if(next < component) AS __ch"),
+        )
+        n_changed = got["__ch"]
         state = improved.select("id", F.col("next").alias("component"))
         if n_changed == 0:
             break
@@ -816,8 +808,6 @@ def strongly_connected_components(
                 f"column {col!r} is {dt.simpleString()} — use "
                 f"strongly_connected_components_closure for non-numeric ids"
             )
-    from pyspark.sql import Observation
-
     st = {"outer_passes": 0, "trim_rounds": 0, "color_rounds": 0, "bw_rounds": 0,
           "max_state_rows": 0}
     spark = edges.sparkSession
@@ -843,15 +833,9 @@ def strongly_connected_components(
             local_finish_edges = _LOCAL_FINISH_EDGES
 
     def _ckpt(df: DataFrame, *metrics):
-        """Materialize via localCheckpoint with the probe metrics riding the
-        SAME action (Observation): returns (checkpointed_df, metric_values).
-        Row counts are always observed — they feed both the convergence
-        probes and the max_state_rows accounting for free."""
-        obs = Observation()
-        out = df.observe(
-            obs, F.count(F.lit(1)).alias("__n"), *metrics
-        ).localCheckpoint(eager=True)
-        got = obs.get
+        """``checkpoint`` plus the max_state_rows accounting, which reads the
+        row count every checkpoint observes anyway."""
+        out, got = checkpoint(df, *metrics)
         st["max_state_rows"] = max(st["max_state_rows"], got["__n"])
         return out, got
 
@@ -1049,10 +1033,7 @@ def strongly_connected_components(
     # every node was peeled or colored into exactly one found part (self-
     # loop-only nodes included — trim handled them), so the result is the
     # plain union of checkpointed parts: the caller's action is narrow
-    out = done_parts[0]
-    for part in done_parts[1:]:
-        out = out.unionByName(part)
-    return out
+    return _union_all(done_parts)
 
 
 def hits(
@@ -1068,11 +1049,11 @@ def hits(
 
     Overflow guard (ADVICE r08): path counts grow like (degree^2)^rounds,
     and Spark's non-ANSI BIGINT arithmetic WRAPS silently where an oracle
-    errors. Before each round the incoming vector's max is checked against
-    (2^63-1)/|E| — a sum of at most |E| terms each <= that bound cannot
-    wrap — and the kernel raises OverflowError instead of returning wrong
-    scores. The check is one O(n)-input scalar aggregate per half-round on
-    an already-checkpointed vector.
+    errors. Before each half-round the incoming vector's max is checked
+    against (2^63-1)/|E| — a sum of at most |E| terms each <= that bound
+    cannot wrap — and the kernel raises OverflowError instead of returning
+    wrong scores. The max rides the vector's own checkpoint, so the guard
+    costs no job.
 
     Per round: two broadcast-or-hash edge joins + two aggregations keyed on
     the node id; state is the O(n) (id, h) vector, checkpointed per round.
@@ -1083,53 +1064,38 @@ def hits(
     # materialized once (r16): e feeds two joins per round, and its count
     # seeds the overflow guard — an unmaterialized plan re-derives the
     # caller's edge pipeline per use
-    e = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    e, got = checkpoint(edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).distinct())
+    safe_max = (2**63 - 1) // max(got["__n"], 1)
+    nodes, _ = checkpoint(
+        e.select(F.col("s").alias("id")).unionByName(e.select(F.col("d").alias("id"))).distinct()
     )
-    nodes = (
-        e.select(F.col("s").alias("id"))
-        .unionByName(e.select(F.col("d").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    h = nodes.select("id", F.lit(1).cast("long").alias("h"))
-    a = None
-    safe_max = (2**63 - 1) // max(e.count(), 1)
+    h, h_max = nodes.select("id", F.lit(1).cast("long").alias("h")), 1
 
-    def _guard(vec: DataFrame, col: str) -> None:
-        mx = vec.agg(F.max(F.abs(F.col(col)))).collect()[0][0] or 0
-        if mx > safe_max:
+    def _half_round(vec: DataFrame, vec_max: int, col: str, key: str, out_key: str, out: str):
+        """Guard ``vec``'s observed max, then sum its scores over the edges
+        into the other side's vector, checkpointed with that vector's max
+        absolute score observed for the next guard."""
+        if vec_max > safe_max:
             raise OverflowError(
-                f"hits: unnormalized {col}-scores reached {mx}; the next "
+                f"hits: unnormalized {col}-scores reached {vec_max}; the next "
                 f"summation of up to |E| terms may exceed int64 (safe max "
                 f"{safe_max}). Reduce rounds or normalize externally."
             )
+        summed = (
+            e.join(vec.withColumnRenamed("id", key), key)
+            .groupBy(F.col(out_key).alias("id"))
+            .agg(F.sum(col).alias(out))
+        )
+        res, got = checkpoint(
+            nodes.join(summed, "id", "left")
+            .select("id", F.coalesce(out, F.lit(0)).cast("long").alias(out)),
+            F.expr(f"max(abs({out})) AS __mx"),
+        )
+        return res, got["__mx"] or 0
 
     for _ in range(rounds):
-        _guard(h, "h")
-        a_sum = (
-            e.join(h.withColumnRenamed("id", "s"), "s")
-            .groupBy(F.col("d").alias("id"))
-            .agg(F.sum("h").alias("a"))
-        )
-        a = (
-            nodes.join(a_sum, "id", "left")
-            .select("id", F.coalesce("a", F.lit(0)).cast("long").alias("a"))
-            .localCheckpoint(eager=True)
-        )
-        _guard(a, "a")
-        h_sum = (
-            e.join(a.withColumnRenamed("id", "d"), "d")
-            .groupBy(F.col("s").alias("id"))
-            .agg(F.sum("a").alias("h"))
-        )
-        h = (
-            nodes.join(h_sum, "id", "left")
-            .select("id", F.coalesce("h", F.lit(0)).cast("long").alias("h"))
-            .localCheckpoint(eager=True)
-        )
+        a, a_max = _half_round(h, h_max, "h", "s", "d", "a")
+        h, h_max = _half_round(a, a_max, "a", "d", "s", "h")
     return (
         h.join(a, "id")
         .select(F.col("id").cast("long"), F.col("h").alias("hub"), F.col("a").alias("auth"))
@@ -1162,12 +1128,10 @@ def personalized_pagerank(
     n_s = len(seeds)
     in_s = F.col("id").isin(seeds)
     # same once-materialized static relations as global pagerank (r16)
-    e = edges.select(src, dst).localCheckpoint(eager=True)
-    nodes = _nodes(e, src, dst).localCheckpoint(eager=True)
-    out_deg = (
-        e.groupBy(F.col(src).alias("id"))
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .localCheckpoint(eager=True)
+    e, _ = checkpoint(edges.select(src, dst))
+    nodes, _ = checkpoint(_nodes(e, src, dst))
+    out_deg, _ = checkpoint(
+        e.groupBy(F.col(src).alias("id")).agg(F.count(F.lit(1)).alias("deg"))
     )
     base_fp = (damping_den - damping_num) * scale // (damping_den * n_s)
     init = nodes.select(
@@ -1216,26 +1180,23 @@ def maximal_independent_set(
     collision-free by the id suffix); each round, every undecided node
     strictly smaller than all its undecided neighbors joins the MIS and
     knocks its neighbors out. Expected O(log n) rounds; each round is two
-    joins + one aggregation over the shrinking undecided set, checkpointed.
+    joins + one aggregation over the shrinking undecided set, two jobs (the
+    winners and the undecided set, whose observed count is the convergence
+    test); the winners of all rounds are unioned once at the end.
     Deterministic — same MIS on any engine/partitioning, so an unrolled SQL
     oracle hash-matches. Raises at budget instead of returning a
     non-maximal set."""
     if max_rounds < 1:
         raise ValueError(f"need max_rounds >= 1, got {max_rounds}")
-    nb = _sym_neighbors(edges, src, dst).localCheckpoint(eager=True)
+    nb, _ = checkpoint(_sym_neighbors(edges, src, dst))
     pr = F.concat(
         F.md5(F.col("id").cast("string")),
         F.lit("|"),
         F.lpad(F.col("id").cast("string"), 20, "0"),
     )
-    und = (
-        nb.select(F.col("a").alias("id"))
-        .distinct()
-        .select("id", pr.alias("pr"))
-        .localCheckpoint(eager=True)
-    )
-    all_nodes = und.select("id").localCheckpoint(eager=True)
-    mis = None
+    und, _ = checkpoint(nb.select(F.col("a").alias("id")).distinct().select("id", pr.alias("pr")))
+    all_nodes = und.select("id")
+    wins = []
     for _ in range(max_rounds):
         nmin = (
             nb.join(und.select(F.col("id").alias("a")), "a")
@@ -1243,26 +1204,21 @@ def maximal_independent_set(
             .groupBy(F.col("a").alias("id"))
             .agg(F.min("pr_b").alias("mn"))
         )
-        win = (
+        win, _ = checkpoint(
             und.join(nmin, "id", "left")
             .filter(F.col("mn").isNull() | (F.col("pr") < F.col("mn")))
             .select("id")
-            .localCheckpoint(eager=True)
         )
-        mis = win if mis is None else mis.unionByName(win).localCheckpoint(eager=True)
+        wins.append(win)
         removed = (
             nb.join(win.select(F.col("id").alias("a")), "a")
             .select(F.col("b").alias("id"))
             .distinct()
         )
-        und = (
-            und.join(win, "id", "left_anti")
-            .join(removed, "id", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if und.isEmpty():
+        und, got = checkpoint(und.join(win, "id", "left_anti").join(removed, "id", "left_anti"))
+        if got["__n"] == 0:
             return all_nodes.join(
-                mis.withColumn("__m", F.lit(1)), "id", "left"
+                _union_all(wins).withColumn("__m", F.lit(1)), "id", "left"
             ).select(
                 F.col("id").cast("long"), F.col("__m").isNotNull().alias("in_mis")
             )
@@ -1280,11 +1236,12 @@ def maximal_matching(
     made total by an id suffix) is the strict minimum at BOTH endpoints
     joins the matching, and all edges touching its endpoints drop out.
     Expected O(log n) rounds; per round one vertex-keyed min aggregation +
-    one join over the shrinking edge set. Deterministic on any engine, so
-    an unrolled SQL oracle hash-matches."""
+    one join over the shrinking edge set, two jobs (the winners and the
+    undecided set, whose observed count is the convergence test).
+    Deterministic on any engine, so an unrolled SQL oracle hash-matches."""
     if max_rounds < 1:
         raise ValueError(f"need max_rounds >= 1, got {max_rounds}")
-    e0 = (
+    e0, _ = checkpoint(
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("a"),
             F.greatest(F.col(src), F.col(dst)).alias("b"),
@@ -1300,10 +1257,9 @@ def maximal_matching(
                 F.lpad(F.col("b").cast("string"), 20, "0"),
             ),
         )
-        .localCheckpoint(eager=True)
     )
     und = e0
-    matched = None
+    wins = []
     for _ in range(max_rounds):
         vmin = (
             und.select(F.col("a").alias("v"), "pr")
@@ -1311,29 +1267,25 @@ def maximal_matching(
             .groupBy("v")
             .agg(F.min("pr").alias("mn"))
         )
-        win = (
+        win, _ = checkpoint(
             und.join(vmin.withColumnsRenamed({"v": "a", "mn": "ma"}), "a")
             .join(vmin.withColumnsRenamed({"v": "b", "mn": "mb"}), "b")
             .filter((F.col("pr") == F.col("ma")) & (F.col("pr") == F.col("mb")))
             .select("a", "b")
-            .localCheckpoint(eager=True)
         )
-        matched = (
-            win if matched is None else matched.unionByName(win).localCheckpoint(eager=True)
-        )
+        wins.append(win)
         mv = (
             win.select(F.col("a").alias("v"))
             .unionByName(win.select(F.col("b").alias("v")))
             .distinct()
         )
-        und = (
+        und, got = checkpoint(
             und.join(mv.withColumnsRenamed({"v": "a"}), "a", "left_anti")
             .join(mv.withColumnsRenamed({"v": "b"}), "b", "left_anti")
-            .localCheckpoint(eager=True)
         )
-        if und.isEmpty():
+        if got["__n"] == 0:
             return e0.select("a", "b").join(
-                matched.withColumn("__m", F.lit(1)), ["a", "b"], "left"
+                _union_all(wins).withColumn("__m", F.lit(1)), ["a", "b"], "left"
             ).select(
                 F.col("a").cast("long"), F.col("b").cast("long"),
                 F.col("__m").isNotNull().alias("in_matching"),

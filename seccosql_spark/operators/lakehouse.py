@@ -65,10 +65,11 @@ import re
 import shutil
 from urllib.parse import quote, unquote
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from seccosql_spark.operators.recursion import checkpoint
 from seccosql_spark.sqltext import quote_ident
 
 _MANIFESTS = "_manifests"
@@ -1905,15 +1906,14 @@ def merge_cow(
     # checkpoint lives in executor storage: a lost executor fails the
     # write below, before any manifest is published.
     utc = _transform_utc(m)
-    obs = Observation()
     pexpr = _partition_expr(pcol, updates, utc)
-    updates = updates.observe(
-        obs,
+    updates, got = checkpoint(
+        updates,
         F.collect_set(
             F.coalesce(F.nullif(pexpr, F.lit("")), F.lit(_HIVE_DEFAULT))
         ).alias("touched"),
-    ).localCheckpoint(eager=True)
-    touched = set(obs.get["touched"])
+    )
+    touched = set(got["touched"])
     # ALL live files per partition: append_commit creates multi-file
     # partitions, and keeping only one entry per partition silently dropped
     # every earlier file's rows from the merge AND from carried manifests

@@ -30,6 +30,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from seccosql_spark.operators.recursion import checkpoint
 from seccosql_spark.sqltext import quote_ident
 
 # Metadata rows per range partition when deriving the pack fan-out from the
@@ -60,16 +61,9 @@ def pack_by_budget(
     # derivation just to pick 32 split points. The projection is pure pack
     # metadata (id columns + one integer weight), the guide §8 "decide with
     # small rows" shape, so the materialization is bounded at any corpus
-    # scale. The metadata row count rides the checkpoint action as an
-    # Observation (zero extra jobs, the k-truss peel-count pattern).
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    meta = (
-        df.select(*id_cols, weight_col)
-        .observe(obs, F.count(F.lit(1)).alias("__n"))
-        .localCheckpoint(eager=True)
-    )
+    # scale. The metadata row count rides the checkpoint action (zero extra
+    # jobs).
+    meta, got = checkpoint(df.select(*id_cols, weight_col))
     # Range-partition fan-out derived from the OBSERVED metadata size
     # (r17, guide §2 / VERDICT r16 task 4: the static defaultParallelism
     # fan-out made curation's 32-core bench SLOWER than 8-core — every
@@ -86,8 +80,7 @@ def pack_by_budget(
             rows_per_part = int(spark.conf.get(_PACK_ROWS_KEY, ""))
         except (TypeError, ValueError):
             rows_per_part = _PACK_ROWS_PER_PARTITION
-        n_rows = int(obs.get["__n"] or 0)
-        n_part = max(1, -(-n_rows // max(1, rows_per_part)))
+        n_part = max(1, -(-got["__n"] // max(1, rows_per_part)))
     if n_part == 1:
         # Degenerate fan-out (observed rows fit one range partition): the
         # general path below would still pay a repartitionByRange(1), a

@@ -19,6 +19,7 @@ from seccosql_spark.graph.algorithms import (
     pagerank,
 )
 from seccosql_spark.graph.graphframe import SeccoGraphFrame
+from seccosql_spark.operators.recursion import checkpoint, semi_naive
 from seccosql_spark.registration import register
 from seccosql_spark.session import SeccoSession
 
@@ -392,22 +393,13 @@ def g_triangle_wcoj(sess: SeccoSession):
     # otherwise each re-run the lineitem scan + dedup shuffle (measured 3
     # scans / 3 exchanges at sf0.1). Same rationale as pattern()'s
     # multi-edge materialization; per-invocation localCheckpoint, nothing
-    # cached across runs. The edge count (a cheap count over the
-    # materialized rows) feeds rel_sizes so the hypercube's cell count
-    # adapts to the data and the cluster instead of a local-mode constant
-    # (share choice never changes the result set — every binding lands in
-    # exactly one cell for any share vector).
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    e = (
-        sess.spark.sql(EDGES_SPARSE)
-        .observe(obs, F.expr("count(1) AS __m"))
-        .localCheckpoint(eager=True)
-    )
-    # edge count rides the checkpoint job as an Observation (r17: one job
-    # saved per run vs a separate .count() — the pack_by_budget pattern)
-    m = int(obs.get["__m"] or 0)
+    # cached across runs. The edge count, observed on the same job, feeds
+    # rel_sizes so the hypercube's cell count adapts to the data and the
+    # cluster instead of a local-mode constant (share choice never changes
+    # the result set — every binding lands in exactly one cell for any
+    # share vector).
+    e, got = checkpoint(sess.spark.sql(EDGES_SPARSE))
+    m = got["__n"]
     r = e.selectExpr("src AS a", "dst AS b")
     s = e.selectExpr("src AS b", "dst AS c")
     t = e.selectExpr("src AS c", "dst AS a")
@@ -548,25 +540,25 @@ def g_bfs_distances(sess: SeccoSession):
     round joins only the newly-reached frontier against the edges, so the
     loop stops after `eccentricity(0)` rounds (not a fixed budget). A naive
     (id, d) closure would re-derive ever-larger d on the cyclic graph and
-    never converge."""
-    edges = sess.spark.sql(EDGES_SPARK).localCheckpoint(eager=True)
-    frontier = sess.spark.sql("SELECT CAST(0 AS BIGINT) AS id, 0 AS d").localCheckpoint(
-        eager=True
-    )
-    seen = frontier
-    for _ in range(64):
-        nxt = (
+    never converge. The oracle saturates d at 64 but still reaches nodes
+    beyond that horizon, so a frontier still live after 64 rounds raises
+    rather than returning a short answer."""
+    edges, _ = checkpoint(sess.spark.sql(EDGES_SPARK))
+
+    def expand(frontier, seen, _round):
+        return (
             frontier.join(edges, frontier["id"] == edges["src"])
             .select(F.col("dst").alias("id"), (F.col("d") + 1).alias("d"))
             .distinct()
             .join(seen.select(F.col("id").alias("__sid")),
                   F.col("id") == F.col("__sid"), "left_anti")
-            .localCheckpoint(eager=True)
         )
-        if nxt.isEmpty():
-            break
-        seen = seen.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
+
+    seen, _ = semi_naive(
+        sess.spark.sql("SELECT CAST(0 AS BIGINT) AS id, 0 AS d"), expand, 64,
+        exhausted="BFS still expanding after 64 rounds; the 64-round cap must "
+        "exceed the eccentricity of node 0",
+    )
     return sess.from_spark(seen.select("id", F.col("d").cast("int").alias("dist")))
 
 
@@ -836,57 +828,42 @@ def g_diameter_doublesweep(sess: SeccoSession):
     reach nothing else — deterministic on disconnected graphs too)."""
     spark = sess.spark
     e = spark.sql(EDGES_SPARSE)
-    nb = (
+    nb, got = checkpoint(
         e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .unionByName(e.select(F.col("dst").alias("a"), F.col("src").alias("b")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        F.expr("min(a) AS __start"),
     )
 
-    def _bfs(start_id):
-        frontier = spark.createDataFrame(
-            [(start_id, 0)], "id LONG, d INT"
-        ).localCheckpoint(eager=True)
-        seen = frontier
-
-        def _expand(frontier, seen):
-            return (
-                frontier.join(nb, frontier["id"] == nb["a"])
-                .select(F.col("b").alias("id"), (F.col("d") + 1).alias("d"))
-                .distinct()
-                .join(
-                    seen.select(F.col("id").alias("__sid")),
-                    F.col("id") == F.col("__sid"),
-                    "left_anti",
-                )
+    def _expand(frontier, seen, _round):
+        return (
+            frontier.join(nb, frontier["id"] == nb["a"])
+            .select(F.col("b").alias("id"), (F.col("d") + 1).alias("d"))
+            .distinct()
+            .join(
+                seen.select(F.col("id").alias("__sid")),
+                F.col("id") == F.col("__sid"),
+                "left_anti",
             )
+        )
 
-        for _ in range(64):
-            nxt = _expand(frontier, seen).localCheckpoint(eager=True)
-            if nxt.isEmpty():
-                break
-            seen = seen.unionByName(nxt).localCheckpoint(eager=True)
-            frontier = nxt
-        else:
-            # budget discipline: the oracle's recursion saturates d at 64
-            # and would still COUNT beyond-horizon nodes, so a silent stop
-            # here diverges on any component with eccentricity > 64 — fail
-            # loudly instead (same contract as closeness/betweenness)
-            if not _expand(frontier, seen).isEmpty():
-                raise RuntimeError(
-                    "double-sweep BFS still expanding after 64 rounds; "
-                    "the 64-round cap must exceed the graph's eccentricity"
-                )
-        return seen
+    def _bfs(start_id):
+        """(farthest node, its distance, nodes reached): ties broken by min
+        id. The oracle's recursion saturates d at 64 and would still COUNT
+        beyond-horizon nodes, so a frontier live after 64 rounds raises."""
+        seen, _ = semi_naive(
+            spark.createDataFrame([(start_id, 0)], "id LONG, d INT"), _expand, 64,
+            exhausted="double-sweep BFS still expanding after 64 rounds; "
+            "the 64-round cap must exceed the graph's eccentricity",
+        )
+        far = seen.selectExpr("max(struct(d, -id)) AS far", "count(1) AS n").collect()[0]
+        return -far["far"][1], far["far"][0], far["n"]
 
-    start_id = nb.agg(F.min("a")).collect()[0][0]
-    d1 = _bfs(start_id)
-    sweep_id = d1.orderBy(F.col("d").desc(), "id").limit(1).collect()[0]["id"]
-    d2 = _bfs(sweep_id)
-    far = d2.orderBy(F.col("d").desc(), "id").limit(1).collect()[0]
-    n_reached = d2.count()
+    start_id = got["__start"]
+    sweep_id, _, _ = _bfs(start_id)
+    far_id, far_d, n_reached = _bfs(sweep_id)
     out = spark.createDataFrame(
-        [(start_id, sweep_id, far["id"], far["d"], n_reached)],
+        [(start_id, sweep_id, far_id, far_d, n_reached)],
         "start_id LONG, sweep_id LONG, far_id LONG, diameter_lb INT, n_reached LONG",
     )
     return sess.from_spark(out)

@@ -457,10 +457,11 @@ def g_modularity_mod4(sess: SeccoSession):
     one broadcast-friendly membership join; the partition is a fixed rule
     so both engines derive it identically."""
     from seccosql_spark.graph.algorithms import _sym_neighbors
+    from seccosql_spark.operators.recursion import checkpoint
 
-    nb = _sym_neighbors(sess.spark.sql(EDGES_SPARK)).localCheckpoint(eager=True)
+    nb, got = checkpoint(_sym_neighbors(sess.spark.sql(EDGES_SPARK)))
     deg = nb.groupBy(F.col("a").alias("id")).agg(F.count(F.lit(1)).alias("d"))
-    m2 = nb.count()
+    m2 = got["__n"]
     comm = deg.select("id", (F.col("id") % 4).alias("c"))
     intra = (
         nb.join(comm.withColumnsRenamed({"id": "a", "c": "ca"}), "a")

@@ -956,6 +956,7 @@ def text_novelty_curve(sess: SeccoSession):
 # Closeness centrality (multi-source frontier BFS)
 # ---------------------------------------------------------------------------
 
+from seccosql_spark.operators.recursion import checkpoint, semi_naive  # noqa: E402
 from seccosql_spark.queries.graph import EDGES_SPARSE  # noqa: E402
 
 CLOSENESS_ORACLE = f"""
@@ -1008,11 +1009,10 @@ def g_closeness_centrality(sess: SeccoSession, source_fraction: float = 1.0,
     distance cap and the testdata graph's eccentricity)."""
     spark = sess.spark
     e = spark.sql(EDGES_SPARSE)
-    nb = (
+    nb, _ = checkpoint(
         e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .unionByName(e.select(F.col("dst").alias("a"), F.col("src").alias("b")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     seeds = nb.select(F.col("a").alias("s")).distinct()
     if source_fraction < 1.0:
@@ -1022,12 +1022,8 @@ def g_closeness_centrality(sess: SeccoSession, source_fraction: float = 1.0,
             F.pmod(F.xxhash64(F.col("s")), F.lit(10000))
             < F.lit(int(round(source_fraction * 10000)))
         )
-    frontier = seeds.select(
-        "s", F.col("s").alias("id"), F.lit(0).alias("d")
-    ).localCheckpoint(eager=True)
-    seen = frontier
 
-    def _expand(frontier, seen):
+    def _expand(frontier, seen, _round):
         return (
             frontier.join(nb, frontier["id"] == nb["a"])
             .select("s", F.col("b").alias("id"), (F.col("d") + 1).alias("d"))
@@ -1039,20 +1035,11 @@ def g_closeness_centrality(sess: SeccoSession, source_fraction: float = 1.0,
             )
         )
 
-    for _ in range(max_rounds):
-        nxt = _expand(frontier, seen).localCheckpoint(eager=True)
-        if nxt.isEmpty():
-            break
-        seen = seen.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    else:
-        # budget exhausted with a live frontier: distances beyond the
-        # horizon would be silently wrong — fail loudly, like ktruss/MIS
-        if not _expand(frontier, seen).isEmpty():
-            raise RuntimeError(
-                f"closeness BFS still expanding after {max_rounds} rounds; "
-                "raise max_rounds (graph eccentricity exceeds the budget)"
-            )
+    seen, _ = semi_naive(
+        seeds.select("s", F.col("s").alias("id"), F.lit(0).alias("d")), _expand, max_rounds,
+        exhausted=f"closeness BFS still expanding after {max_rounds} rounds; "
+        "raise max_rounds (graph eccentricity exceeds the budget)",
+    )
     out = (
         seen.groupBy(F.col("s").alias("id"))
         .agg(
@@ -1531,11 +1518,10 @@ def g_betweenness_sampled(sess: SeccoSession):
     needs BETWEENNESS_K itself raised, which regenerates the oracle too."""
     spark = sess.spark
     e = spark.sql(EDGES_SPARSE)
-    nb = (
+    nb, _ = checkpoint(
         e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .unionByName(e.select(F.col("dst").alias("a"), F.col("src").alias("b")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     nodes = nb.select(F.col("a").alias("id")).distinct()
     seeds = nodes.where(
@@ -1543,12 +1529,6 @@ def g_betweenness_sampled(sess: SeccoSession):
             "0", "1", "2", "3"
         )
     ).select(F.col("id").alias("s"))
-
-    frontier = seeds.select(
-        "s", F.col("s").alias("id"), F.lit(0).alias("d"),
-        F.lit(1).cast("long").alias("sig"),
-    ).localCheckpoint(eager=True)
-    seen = frontier
 
     def _expand(frontier, seen, depth):
         cand = (
@@ -1565,22 +1545,15 @@ def g_betweenness_sampled(sess: SeccoSession):
             .select("s", F.col("nid").alias("id"), F.lit(depth).alias("d"), "sig")
         )
 
-    depth = 0
-    for _ in range(BETWEENNESS_K):
-        depth += 1
-        nxt = _expand(frontier, seen, depth).localCheckpoint(eager=True)
-        if nxt.isEmpty():
-            depth -= 1
-            break
-        seen = seen.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    else:
-        if not _expand(frontier, seen, depth + 1).isEmpty():
-            raise RuntimeError(
-                f"betweenness BFS still expanding after {BETWEENNESS_K} "
-                "rounds; raise BETWEENNESS_K (regenerates the unrolled "
-                "oracle to the same depth)"
-            )
+    seen, depth = semi_naive(
+        seeds.select(
+            "s", F.col("s").alias("id"), F.lit(0).alias("d"), F.lit(1).cast("long").alias("sig")
+        ),
+        _expand,
+        BETWEENNESS_K,
+        exhausted=f"betweenness BFS still expanding after {BETWEENNESS_K} rounds; raise "
+        "BETWEENNESS_K (regenerates the unrolled oracle to the same depth)",
+    )
 
     # backward: delta at the deepest level is 0; one join per level walking up
     deltas = {

@@ -1,5 +1,6 @@
-"""Build cost of the planners the interactive benchmark runs: warm-build
-py4j round trips and build-time Spark jobs, pinned under ceilings.
+"""Build cost of the planners the interactive benchmark runs and of the
+iterative kernels: warm-build py4j round trips and build-time Spark jobs,
+pinned under ceilings.
 
 A planner that builds its hot expressions through the Column API pays
 about five py4j round trips per node in PySpark 4.x (each call is wrapped
@@ -27,6 +28,39 @@ ROUND_TRIP_CEILINGS = {
     "g_triangle_wcoj": 200,
     "g_triangle_count": 80,
     "pkfk_star_planned": 100,
+}
+
+
+# Warm-build Spark jobs of the iterative kernels at the test SF (sf0.001,
+# local[8]). Every round of these kernels runs on ``recursion.checkpoint``
+# (one job, its convergence probe observed on the same action) or
+# ``recursion.semi_naive`` (one job per frontier level). Before that, the
+# census read: g_connected_components 25, dedup_minhash_clusters 27,
+# dedup_cluster_canonical 35, g_kcore 34, g_ktruss 39, g_sssp_weighted 26,
+# g_maximal_independent_set 35, g_maximal_matching 28, g_hits_2rounds 34,
+# g_pagerank_3rounds 30, g_personalized_pagerank 28, g_scc 24,
+# with_recursive_reach 26, g_bfs_distances 13, g_closeness_centrality 52,
+# g_betweenness_sampled 102, g_diameter_doublesweep 93. Each ceiling is the
+# count after the change plus 2 (adaptive execution moves a count by one
+# job between runs). A ceiling may only go down.
+BUILD_JOB_CEILINGS = {
+    "dedup_cluster_canonical": 27,
+    "dedup_minhash_clusters": 25,
+    "g_betweenness_sampled": 91,
+    "g_bfs_distances": 12,
+    "g_closeness_centrality": 41,
+    "g_connected_components": 21,
+    "g_diameter_doublesweep": 71,
+    "g_hits_2rounds": 26,
+    "g_kcore": 20,
+    "g_ktruss": 41,
+    "g_maximal_independent_set": 33,
+    "g_maximal_matching": 25,
+    "g_pagerank_3rounds": 30,
+    "g_personalized_pagerank": 30,
+    "g_scc": 26,
+    "g_sssp_weighted": 14,
+    "with_recursive_reach": 20,
 }
 
 
@@ -73,3 +107,19 @@ def test_range_batched_table_stores_max_key(spark):
     assert jobs == 0
     assert (table, m) == first
     assert m == spark.table("orders").agg({"o_orderkey": "max"}).collect()[0][0]
+
+
+@pytest.mark.parametrize("name", sorted(BUILD_JOB_CEILINGS))
+def test_iterative_build_jobs_under_ceiling(spark, name):
+    """Round shape of the iterative kernels: a probe job added back to a
+    round (a ``count()``/``isEmpty()`` after a checkpoint, a re-checkpoint
+    of the accumulated set) multiplies by the round count and fails here.
+
+    The ceiling bounds the warm build. A first build in the process can
+    also pay one-time jobs (``dedup_minhash_clusters`` pays 9), which a
+    warm build never adds, so the warm build is measured only when the
+    first one is over the ceiling."""
+    _, jobs = _build_jobs(spark, lambda: run(name, spark, SF_DIR))
+    if jobs > BUILD_JOB_CEILINGS[name]:
+        _, jobs = _build_jobs(spark, lambda: run(name, spark, SF_DIR))
+    assert 0 < jobs <= BUILD_JOB_CEILINGS[name], jobs

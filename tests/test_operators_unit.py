@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from seccosql_spark.operators.dedup import exact_dedup, minhash_near_dups
 from seccosql_spark.operators.joins import natural_join_chain, union_by_update
-from seccosql_spark.operators.recursion import bounded_fixpoint, iterate
+from seccosql_spark.operators.recursion import bounded_fixpoint, checkpoint, iterate, semi_naive
 from seccosql_spark.plans.ghd import multiway_natural_join
 
 
@@ -80,6 +80,73 @@ def test_bounded_fixpoint_respects_round_limit(spark):
     out = bounded_fixpoint(edges, step, max_rounds=1)
     # base (length 1) + one round (length 2) only
     assert (1, 4) not in rows(out) and (1, 3) in rows(out)
+
+
+def _path_expand(edges):
+    """semi_naive expand for single-source reachability over ``edges``."""
+
+    def expand(frontier, seen, _round):
+        return (
+            frontier.join(edges, frontier["id"] == edges["src"])
+            .select(F.col("dst").alias("id"))
+            .distinct()
+            .join(seen, "id", "left_anti")
+        )
+
+    return expand
+
+
+def test_semi_naive_raises_on_a_path_longer_than_its_budget(spark):
+    edges = spark.createDataFrame([(i, i + 1) for i in range(6)], "src LONG, dst LONG")
+    seed = spark.createDataFrame([(0,)], "id LONG")
+    with pytest.raises(RuntimeError, match="path too long"):
+        semi_naive(seed, _path_expand(edges), 5, exhausted="path too long")
+    # without ``exhausted`` the truncated result is returned
+    seen, rounds = semi_naive(seed, _path_expand(edges), 5)
+    assert rounds == 5 and rows(seen) == [(i,) for i in range(6)]
+
+
+def test_semi_naive_converging_on_the_last_round_does_not_raise(spark):
+    edges = spark.createDataFrame([(i, i + 1) for i in range(5)], "src LONG, dst LONG")
+    seed = spark.createDataFrame([(0,)], "id LONG")
+    seen, rounds = semi_naive(seed, _path_expand(edges), 5, exhausted="path too long")
+    assert rounds == 5 and rows(seen) == [(i,) for i in range(6)]
+    seen, rounds = semi_naive(seed, _path_expand(edges), 8)
+    assert rounds == 5 and rows(seen) == [(i,) for i in range(6)]
+
+
+def test_checkpoint_observes_count_and_metrics(spark):
+    df = spark.range(10)
+    out, got = checkpoint(df, F.expr("sum(id) AS s"))
+    assert got["__n"] == 10 and got["s"] == 45
+    assert out.count() == 10
+
+
+def test_checkpoint_failure_raises_without_persist_fallback(spark, monkeypatch):
+    """A real job failure inside the checkpoint raises once; only Spark's
+    AttributeMap NoSuchElementException falls back to persist()."""
+    df_cls = type(spark.range(1))
+    persisted = []
+    orig = df_cls.persist
+
+    def spy(self, *args, **kwargs):
+        persisted.append(True)
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(df_cls, "persist", spy)
+    bad = spark.range(3).select(F.expr("raise_error('boom')").alias("x"))
+    with pytest.raises(Exception, match="boom"):
+        checkpoint(bad)
+    assert persisted == []
+
+    def attribute_map_bug(self, eager=True):
+        from pyspark.errors import PySparkException
+
+        raise PySparkException(message="java.util.NoSuchElementException: key not found: id#1")
+
+    monkeypatch.setattr(df_cls, "localCheckpoint", attribute_map_bug)
+    out, got = checkpoint(spark.range(4))
+    assert persisted == [True] and got["__n"] == 4 and out.count() == 4
 
 
 def test_iterate_runs_fixed_rounds(spark):
@@ -390,7 +457,9 @@ def test_pack_by_budget_shards_are_contiguous(spark):
 def test_star_cc_matches_label_propagation(spark):
     """large-star/small-star CC must agree with min-label propagation on
     every topology: long chains (worst case for O(diameter) propagation),
-    cycles, hubs, disconnected pieces, and a pseudo-random graph."""
+    cycles, hubs, disconnected pieces, a pseudo-random graph, and nodes
+    whose only edge is a self-loop. Self-loops stay in the inputs: both
+    kernels must report a self-loop-only node as its own component."""
     import random
 
     from seccosql_spark.graph.algorithms import (
@@ -405,11 +474,10 @@ def test_star_cc_matches_label_propagation(spark):
         + [(20 + i, 20 + (i + 1) % 8) for i in range(8)],
         "hub": [(0, i) for i in range(1, 15)] + [(50, 51)],
         "random": [(rng.randrange(40), rng.randrange(40)) for _ in range(60)],
+        "self_loops": [(1, 1), (2, 3), (7, 7)],
     }
     for name, edge_list in topologies.items():
-        edges = spark.createDataFrame(
-            [(a, b) for a, b in edge_list if a != b], "src LONG, dst LONG"
-        )
+        edges = spark.createDataFrame(edge_list, "src LONG, dst LONG")
         naive = {r["id"]: r["component"] for r in connected_components(edges).collect()}
         star = {r["id"]: r["component"] for r in connected_components_star(edges).collect()}
         assert naive == star, (name, naive, star)
