@@ -92,6 +92,7 @@ from seccosql_spark.queries import lakehouse_q  # noqa: E402,F401
 # every session; overdue-beats-hot guarantees the rotation keeps closing.
 # ---------------------------------------------------------------------------
 _PRIORITY_WINDOW = [
+    "sample_bootstrap_ci",
     "corpus_clean_pass",
     "decontaminate_bloom",
     "decontaminate_ngram8",
@@ -110,6 +111,7 @@ _PRIORITY_WINDOW = [
     "lakehouse_time_travel",
     "stream_lakehouse_ingest",
     "stream_window_counts",
+    "attribution_last_touch",
     "basket_part_pairs",
     "curation_multisignal",
     "dedup_c4_segments",
@@ -140,8 +142,6 @@ _PRIORITY_WINDOW = [
     "multimodal_phash_dedup",
     "orders_bucketed_join",
     "orders_partition_pruned",
-    "sample_bootstrap_ci",
-    "shard_rendezvous_stability",
 ]
 
 
