@@ -142,15 +142,15 @@ def connected_components_star(
     exact set-equality probe runs only when that count equals the previous
     round's. The node set comes from the unfiltered edges, so a node whose
     only edge is a self-loop is its own component."""
-    pairs, got = checkpoint(
+    canon, got = checkpoint(
         edges.select(F.col(src).cast("long").alias("x"), F.col(dst).cast("long").alias("y"))
         .selectExpr("least(x, y) AS lo", "greatest(x, y) AS hi")
         .distinct(),
         F.expr("count_if(lo <> hi) AS __e"),
     )
-    e, n_e = pairs.filter("lo <> hi"), got["__e"]
+    e, n_e = canon.filter("lo <> hi"), got["__e"]
     all_nodes = (
-        pairs.select(F.col("lo").alias("id")).unionByName(pairs.select(F.col("hi").alias("id")))
+        canon.select(F.col("lo").alias("id")).unionByName(canon.select(F.col("hi").alias("id")))
     ).distinct()
 
     def _sym(pairs: DataFrame) -> DataFrame:
