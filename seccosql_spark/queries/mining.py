@@ -956,6 +956,7 @@ def text_novelty_curve(sess: SeccoSession):
 # Closeness centrality (multi-source frontier BFS)
 # ---------------------------------------------------------------------------
 
+from seccosql_spark.graph.algorithms import _union_all  # noqa: E402
 from seccosql_spark.operators.recursion import checkpoint, semi_naive  # noqa: E402
 from seccosql_spark.queries.graph import EDGES_SPARSE  # noqa: E402
 
@@ -1608,12 +1609,12 @@ def g_betweenness_sampled(sess: SeccoSession):
             .localCheckpoint(eager=True)
         )
 
-    levels = [deltas[k] for k in range(1, depth + 1)]
-    if levels:
-        alld = levels[0]
-        for lf in levels[1:]:
-            alld = alld.unionByName(lf)
-        bc = alld.groupBy("id").agg(F.sum("delta").alias("b"))
+    if depth:
+        bc = (
+            _union_all([deltas[k] for k in range(1, depth + 1)])
+            .groupBy("id")
+            .agg(F.sum("delta").alias("b"))
+        )
     else:
         bc = nodes.select("id", F.lit(0).cast("decimal(38,9)").alias("b")).limit(0)
     out = nodes.join(bc, "id", "left").select(
